@@ -63,6 +63,22 @@ def resolve_embeddings(named_embeddings: DataFrame, nodes: DataFrame) -> DataFra
     )
 
 
+def _claims_sup(sub: DataFrame, prob: float) -> DataFrame:
+    """The sup direction of a J7 reset (objects/KGs.py:277-279): each
+    claimed counterpart points back at the max ent_id among its claimants
+    (the reference's ascending loop leaves the last writer in the slot)."""
+    return (
+        sub.groupBy("counterpart_id")
+        .agg(F.max("ent_id").alias("l_id"))
+        .select(
+            F.col("counterpart_id").alias("ent_id"),
+            F.col("l_id").alias("counterpart_id"),
+            F.lit(prob).alias("prob"),
+            F.lit(False).alias("is_lit"),
+        )
+    )
+
+
 def brute_force_argmax(
     emb_l: DataFrame, emb_r: DataFrame, prob: float = 0.2
 ) -> tuple[DataFrame, DataFrame]:
@@ -88,17 +104,7 @@ def brute_force_argmax(
             F.lit(False).alias("is_lit"),
         )
     )
-    sup = (
-        sub.groupBy("counterpart_id")
-        .agg(F.max("ent_id").alias("l_id"))
-        .select(
-            F.col("counterpart_id").alias("ent_id"),
-            F.col("l_id").alias("counterpart_id"),
-            F.lit(prob).alias("prob"),
-            F.lit(False).alias("is_lit"),
-        )
-    )
-    return sub, sup
+    return sub, _claims_sup(sub, prob)
 
 
 def auto_band_bits(
@@ -240,21 +246,9 @@ def lsh_argmax_pair(
     max_bucket_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH-blocked J7 reset returning BOTH directions with the reference's
-    sup derivation (objects/KGs.py:277-279: the ascending loop makes the
-    sup slot the max ent_id among claimants — same rule as
-    brute_force_argmax)."""
+    sup derivation (_claims_sup, the same rule as brute_force_argmax)."""
     sub = lsh_argmax(emb_l, emb_r, dim, prob, n_bits, n_bands, seed, max_bucket_size=max_bucket_size)
-    sup = (
-        sub.groupBy("counterpart_id")
-        .agg(F.max("ent_id").alias("l_id"))
-        .select(
-            F.col("counterpart_id").alias("ent_id"),
-            F.col("l_id").alias("counterpart_id"),
-            F.lit(prob).alias("prob"),
-            F.lit(False).alias("is_lit"),
-        )
-    )
-    return sub, sup
+    return sub, _claims_sup(sub, prob)
 
 
 # Above this many candidate pairs the exact cross join is never the right
@@ -274,7 +268,13 @@ def embedding_reset_matches(
     argmax beyond ``pair_budget`` candidate pairs (or when forced via
     ``use_lsh``). The cross join is THE cartesian scale-killer at web scale,
     so production paths must never reach it implicitly — the size gate here
-    costs two count jobs on the (small-schema) embedding tables.
+    costs one aggregate per side on the (small-schema) embedding tables, the
+    left one also reading the embedding dimension.
+
+    Both returned frames are pinned (localCheckpoint): sub is computed
+    once, sup is derived from the pinned sub, and callers — the PARIS
+    fixpoint reads the match state many times per iteration — never
+    recompute the argmax or pay the LSH signature UDF again.
 
     The LSH band key is auto-sized to the corpus (auto_band_bits over the
     larger side's row count): a fixed narrow key re-admits the quadratic
@@ -285,25 +285,24 @@ def embedding_reset_matches(
     candidate volume stays ~bands·n²/2^bits ≈ 12n (linear). The bucket
     guard is ON here (degenerate embeddings — all-zero vectors — share
     every signature)."""
-    if use_lsh is False:
-        return brute_force_argmax(emb_l, emb_r, prob)
-    n_l, n_r = emb_l.count(), emb_r.count()
-    if use_lsh is None:
-        use_lsh = n_l * n_r > pair_budget
-    if not use_lsh:
-        return brute_force_argmax(emb_l, emb_r, prob)
-    first = emb_l.select(F.size("embedding").alias("d")).first()
-    dim = int(first["d"]) if first is not None else 0
-    if dim <= 0:
-        return brute_force_argmax(emb_l, emb_r, prob)
-    n_bands = 48
-    bits = auto_band_bits(max(n_l, n_r))
-    from prase_spark.datapipe.buckets import DEFAULT_MAX_BUCKET
+    if use_lsh is not False:
+        n_l, dim = emb_l.agg(F.count(F.lit(1)), F.max(F.size("embedding"))).first()
+        n_r = emb_r.count()
+        if use_lsh is None:
+            use_lsh = n_l * n_r > pair_budget
+    if use_lsh and (dim or 0) > 0:
+        from prase_spark.datapipe.buckets import DEFAULT_MAX_BUCKET
 
-    return lsh_argmax_pair(
-        emb_l, emb_r, dim, prob, n_bits=bits * n_bands, n_bands=n_bands,
-        max_bucket_size=DEFAULT_MAX_BUCKET,
-    )
+        n_bands = 48
+        bits = auto_band_bits(max(n_l, n_r))
+        sub = lsh_argmax(
+            emb_l, emb_r, dim, prob, n_bits=bits * n_bands, n_bands=n_bands,
+            max_bucket_size=DEFAULT_MAX_BUCKET,
+        )
+    else:
+        sub = brute_force_argmax(emb_l, emb_r, prob)[0]
+    sub = sub.localCheckpoint()
+    return sub, _claims_sup(sub, prob).localCheckpoint()
 
 
 def blend_embeddings(
