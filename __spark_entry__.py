@@ -40,7 +40,7 @@ def _kg(spark: SparkSession, sf_dir: str, kg: int):
     from prase_spark.kgbuild import build_kg
     from prase_spark.tpch_kg import tpch_raw_triples
 
-    from prase_spark.paris import materialize_concurrently
+    from prase_spark.concurrency import materialize_concurrently
 
     sc = spark.sparkContext
     for k in [k for k in _KG_CACHE if k[0] != sc.applicationId]:
@@ -166,7 +166,7 @@ def _kg1_rel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kg_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics: per-entity in/out degree over KG1's relation
-    edges (the skew-measurement surface for salt_buckets sizing)."""
+    edges (the skew-measurement surface for the PARIS hub joins)."""
     from prase_spark.graphstats import degrees
 
     return degrees(_kg1_rel_edges(spark, sf_dir))
@@ -1558,7 +1558,7 @@ def _q_paris_iter1_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = ParisConfig()
     empty = spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob DOUBLE")
     expanded = evidence_expansion(kg1, kg2, sub, cfg.theta)
-    scores = candidate_scores(expanded, kg1, kg2, empty, empty, cfg, init=True)
+    scores = candidate_scores(expanded, empty, empty, cfg, init=True)
     e_names = kg1.nodes.select(F.col("ent_id").alias("e"), F.col("name").alias("e_name"))
     t_names = kg2.nodes.select(F.col("ent_id").alias("t2"), F.col("name").alias("cand_name"))
     return (
@@ -1583,7 +1583,7 @@ def _q_paris_iter1_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = ParisConfig()
     empty = spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob DOUBLE")
     expanded = evidence_expansion(kg1, kg2, sub, cfg.theta)
-    scores = candidate_scores(expanded, kg1, kg2, empty, empty, cfg, init=True)
+    scores = candidate_scores(expanded, empty, empty, cfg, init=True)
     e_names = kg1.nodes.select(F.col("ent_id").alias("e"), F.col("name").alias("e_name"))
     t_names = kg2.nodes.select(F.col("ent_id").alias("t2"), F.col("name").alias("cand_name"))
     named = (
@@ -3544,7 +3544,7 @@ def _q_web_kg_align_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     the end-to-end contract of the north rule on actual web markup."""
     from prase_spark.config import ParisConfig
     from prase_spark.kgbuild import build_kg
-    from prase_spark.paris import materialize_concurrently
+    from prase_spark.concurrency import materialize_concurrently
     from prase_spark.pipeline import align, alignment_results
     from prase_spark.structured import structured_to_raw_triples
 

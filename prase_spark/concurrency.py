@@ -12,18 +12,19 @@ the node/predicate dict-encodes inside one KG build (kgbuild.py).
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
+
+from prase_spark.config import env_flag
 
 
 def materialize_concurrently(*thunks):
     """Run independent eager-materialization thunks (localCheckpoint /
     persist-count) as CONCURRENT Spark jobs from driver threads.
 
-    ``PRASE_SERIAL_CHECKPOINTS=1`` falls back to sequential execution
-    (A/B lever; also the escape hatch if a cluster's scheduler pools are
-    configured to starve concurrent jobs)."""
-    if len(thunks) == 1 or os.environ.get("PRASE_SERIAL_CHECKPOINTS") == "1":
+    ``PRASE_SERIAL_CHECKPOINTS`` (a config.env_flag: 1/true/yes/on) falls
+    back to sequential execution (A/B lever; also the escape hatch if a
+    cluster's scheduler pools are configured to starve concurrent jobs)."""
+    if env_flag("PRASE_SERIAL_CHECKPOINTS") or len(thunks) == 1:
         return tuple(t() for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futures = [ex.submit(t) for t in thunks]

@@ -26,10 +26,6 @@ class ParisConfig:
     # engine knobs (no reference analog; scale controls)
     checkpoint_dir: str = field(default="/tmp/prase_spark_ckpt")
     checkpoint_every: int = 1
-    # hub-head expansion skew salting: 0 = AUTO (product-skew detection,
-    # buckets sized from the largest hot product); 1 = off (plain join);
-    # >1 = fixed bucket count with the frequency-threshold hot sketch
-    salt_buckets: int = 0
 
 
 # Generated classes kept by Spark's codegen cache (JVM-wide, driver and
@@ -41,17 +37,18 @@ class ParisConfig:
 # CPU-seconds).
 CODEGEN_CACHE_ENTRIES = 2000
 
-_WARMUP_OFF = {"1", "true", "yes", "on"}
-_WARMUP_ON = {"", "0", "false", "no", "off"}
+_FLAG_TRUE = {"1", "true", "yes", "on"}
+_FLAG_FALSE = {"", "0", "false", "no", "off"}
 
 
-def _skip_session_warmup() -> bool:
-    """PRASE_NO_SESSION_WARMUP parsed by value: 1/true/yes/on skip the
-    warmup, unset/empty/0/false/no/off keep it, anything else raises."""
-    raw = os.environ.get("PRASE_NO_SESSION_WARMUP", "").strip().lower()
-    if raw not in _WARMUP_OFF | _WARMUP_ON:
-        raise ValueError(f"PRASE_NO_SESSION_WARMUP={raw!r}: expected 0/1/true/false/yes/no/on/off")
-    return raw in _WARMUP_OFF
+def env_flag(name: str) -> bool:
+    """A boolean environment variable parsed by value, case-insensitive:
+    1/true/yes/on are True, unset/empty/0/false/no/off are False, anything
+    else raises ValueError."""
+    raw = os.environ.get(name, "").strip().lower()
+    if raw not in _FLAG_TRUE | _FLAG_FALSE:
+        raise ValueError(f"{name}={raw!r}: expected 0/1/true/false/yes/no/on/off")
+    return raw in _FLAG_TRUE
 
 
 def _task_slots(master: str, default: int) -> int:
@@ -130,7 +127,7 @@ def get_spark(
     # first real query from ~12 s to ~9 s at sf0.1). Touches no user data
     # and computes nothing any query reuses. PRASE_NO_SESSION_WARMUP=1
     # skips it (e.g. for micro-benchmarks of cold-start itself).
-    if not _skip_session_warmup() and not getattr(session, "_prase_warmed", False):
+    if not env_flag("PRASE_NO_SESSION_WARMUP") and not getattr(session, "_prase_warmed", False):
         (
             session.range(1_000_000, numPartitions=8)
             .selectExpr("id % 97 AS k", "id AS v")

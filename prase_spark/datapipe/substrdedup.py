@@ -169,8 +169,8 @@ def substring_dup_stats(
     # and ~2x wall at 4->16 (BENCH.md r5): on the COMMON unique-heavy
     # fingerprint distribution, map-side combine collapses nothing and
     # the corpus pays two chain evaluations plus two corpus-sized
-    # exchanges. So route by heat (the skew.salted_join sketch
-    # doctrine):
+    # exchanges. So route by heat (sketch the hot keys, split hot from
+    # cold):
     #   1. SKETCH cross-doc-hot fingerprints from a ~1%-of-DOCS
     #      deterministic hash sample (chain cost ~1%; a fingerprint with
     #      >= hot_fp_threshold cross-doc occurrences is caught whp, and

@@ -6,8 +6,8 @@ triples; it never ranks them). At 100-TB construction scale the graph
 itself becomes the product, and the first questions a consumer asks are
 structural: which canonical entities are hubs, which are orphans, how
 skewed is the degree distribution (that skew is also exactly what the
-salted PARIS joins and AQE skew handling must absorb — ``degrees`` is
-the measurement tool for picking ``ParisConfig.salt_buckets``).
+PARIS product-skew guard and AQE skew handling must absorb — ``degrees``
+is the tool for measuring it).
 
 Scale shape:
 - :func:`degrees` is one union + one groupBy over the edge list — a

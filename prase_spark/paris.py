@@ -27,7 +27,9 @@ pre-partitioned by subj (kgbuild); rel-align + functionality are O(|preds|²)
 sparse / O(|preds|) and always broadcast (the reference ships the same dicts
 to every worker process, objects/KGs.py:140-151); θ- and δ-filters prune
 before the expensive expansion exactly like the reference
-(model/PARIS.py:103, 75-78); AQE skew-join splits hub h' keys.
+(model/PARIS.py:103, 75-78); AQE skew-join splits hub h' keys, and the
+product-skew guard (skew.guarded_join) salts the ones whose per-key
+output product AQE cannot split.
 """
 
 from __future__ import annotations
@@ -37,10 +39,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prase_spark.concurrency import materialize_concurrently
 from prase_spark.config import ParisConfig
 from prase_spark.kgbuild import KGFrames
 from prase_spark.normalize import clamp01
 from prase_spark.seed import max_merge
+from prase_spark.skew import guarded_join
 
 
 @dataclass
@@ -126,8 +130,6 @@ def rel_align_update(
 
 def candidate_scores(
     expanded: DataFrame,
-    kg_l: KGFrames,
-    kg_r: KGFrames,
     rel_align_l: DataFrame,
     rel_align_r: DataFrame,
     cfg: ParisConfig,
@@ -135,7 +137,8 @@ def candidate_scores(
 ) -> DataFrame:
     """A7: per-(e, t') noisy-OR score 1 - Π factors (model/PARIS.py:56-78).
     Returns (e, t2, score). Split from the argmax so the driver gate can
-    oracle-check the raw scores.
+    oracle-check the raw scores. ``expanded`` is evidence_expansion's
+    output (it carries the functionality columns ``fun_l``/``fun_r``).
 
     Probe economy (r6, guide §2.3): the expansion stream is the job's
     biggest intermediate (r6 measurement: 54.7M rows at sf0.1, the stage
@@ -175,16 +178,6 @@ def candidate_scores(
     else:
         ev = ev.filter(~F.col("below"))
     ev = ev.drop("below")
-    if "fun_l" not in expanded.columns:
-        fun_l = kg_l.functionality.select(
-            F.col("pred_id").alias("r"), F.col("functionality").alias("fun_l")
-        )
-        ev = ev.join(F.broadcast(fun_l), "r", "left")
-    if "fun_r" not in expanded.columns:
-        fun_r = kg_r.functionality.select(
-            F.col("pred_id").alias("r2"), F.col("functionality").alias("fun_r")
-        )
-        ev = ev.join(F.broadcast(fun_r), "r2", "left")
     factor = (
         (1.0 - F.col("p_h") * F.col("p_sup") * F.coalesce("fun_r", F.lit(0.0)) / eps)
         * (1.0 - F.col("p_h") * F.col("p_sub") * F.coalesce("fun_l", F.lit(0.0)) / eps)
@@ -200,8 +193,6 @@ def candidate_scores(
 
 def entity_candidates(
     expanded: DataFrame,
-    kg_l: KGFrames,
-    kg_r: KGFrames,
     rel_align_l: DataFrame,
     rel_align_r: DataFrame,
     cfg: ParisConfig,
@@ -217,9 +208,7 @@ def entity_candidates(
     Column replacing the default native 0.8/0.2 weighted cosine — the
     pluggable ``fusion_func`` of the reference (objects/KGs.py:82-83);
     build pandas-UDF-backed ones with embed.pandas_fusion."""
-    scored = candidate_scores(
-        expanded, kg_l, kg_r, rel_align_l, rel_align_r, cfg, init
-    )
+    scored = candidate_scores(expanded, rel_align_l, rel_align_r, cfg, init)
     if not init and embeddings_l is not None and embeddings_r is not None:
         # fusion: val = w1·score + w2·cos(emb_e, emb_t2) (test.py:74-76),
         # cosine computed natively (zip_with + aggregate — JVM, no Python).
@@ -259,12 +248,12 @@ def entity_candidates(
     )
 
 
-def evidence_expansion(
+def _expansion_inputs(
     kg_l: KGFrames, kg_r: KGFrames, matches_sub: DataFrame, theta: float
-) -> DataFrame:
-    """J2: the θ-pruned candidate-evidence expansion
-    (e, r, p_h, e_cp, p_e, r2, t2) — one row per (fact of e, fact of h')
-    pair, mirroring the nested loops at model/PARIS.py:100-120."""
+) -> tuple[DataFrame, DataFrame]:
+    """J2a + J5: ``cand_base`` (facts of e whose head h has a θ-passing
+    counterpart h', with e's own counterpart if any) and the non-literal
+    ``facts_r`` (h', r2, t2) it expands against."""
     facts_l = kg_l.triples.filter(~F.col("obj_is_lit")).select(
         F.col("subj").alias("h"), F.col("pred").alias("r"), F.col("obj").alias("e")
     )
@@ -288,26 +277,38 @@ def evidence_expansion(
     facts_r = kg_r.triples.filter(~F.col("obj_is_lit")).select(
         F.col("subj").alias("h_cp"), F.col("pred").alias("r2"), F.col("obj").alias("t2")
     )
-    # pre-attach functionality to the JOIN INPUTS (one probe per fact/cand
-    # row, not per expansion row — candidate_scores skips its own lookups
-    # when the columns are present)
+    return facts_l.join(m_h, "h").join(m_e, "e", "left"), facts_r
+
+
+def _expand(
+    kg_l: KGFrames, kg_r: KGFrames, cand_base: DataFrame, facts_r: DataFrame
+) -> DataFrame:
+    """J2b: the hub-head expansion (e, r, p_h, e_cp, p_e, r2, t2, fun_l,
+    fun_r) — one row per (fact of e, fact of h') pair, mirroring the nested
+    loops at model/PARIS.py:100-120. Functionality attaches to the JOIN
+    INPUTS (one broadcast probe per cand/fact row, not per expansion row —
+    see candidate_scores' probe-economy note), and the join itself goes
+    through the product-skew guard (skew.guarded_join)."""
     fun_l = kg_l.functionality.select(
         F.col("pred_id").alias("r"), F.col("functionality").alias("fun_l")
     )
     fun_r = kg_r.functionality.select(
         F.col("pred_id").alias("r2"), F.col("functionality").alias("fun_r")
     )
-    return (
-        facts_l.join(m_h, "h")
-        .join(m_e, "e", "left")
-        .join(F.broadcast(fun_l), "r", "left")
-        .join(facts_r.join(F.broadcast(fun_r), "r2", "left"), "h_cp")
-        .select("e", "r", "p_h", "e_cp", "p_e", "r2", "t2", "fun_l", "fun_r")
-    )
+    return guarded_join(
+        cand_base.join(F.broadcast(fun_l), "r", "left"),
+        facts_r.join(F.broadcast(fun_r), "r2", "left"),
+        "h_cp",
+        kg_r.triple_count(),
+    ).select("e", "r", "p_h", "e_cp", "p_e", "r2", "t2", "fun_l", "fun_r")
 
 
-# re-exported for existing call sites (pipeline.py, __spark_entry__)
-from prase_spark.concurrency import materialize_concurrently  # noqa: E402
+def evidence_expansion(
+    kg_l: KGFrames, kg_r: KGFrames, matches_sub: DataFrame, theta: float
+) -> DataFrame:
+    """J2: the θ-pruned candidate-evidence expansion, as one lazy frame
+    (the iteration's own plan, without its cand_base pin)."""
+    return _expand(kg_l, kg_r, *_expansion_inputs(kg_l, kg_r, matches_sub, theta))
 
 
 def half_iteration(
@@ -326,122 +327,19 @@ def half_iteration(
     """One directional pass: returns (new rel_align for this side,
     entity-candidate updates or None). Mirrors __run_per_iteration_one_way
     (objects/KGs.py:110-174) with Jacobi state reads."""
-    facts_l = kg_l.triples.filter(~F.col("obj_is_lit")).select(
-        F.col("subj").alias("h"), F.col("pred").alias("r"), F.col("obj").alias("e")
-    )
-    m_h = matches_sub.filter(F.col("prob") >= cfg.theta).select(
-        F.col("ent_id").alias("h"),
-        F.col("counterpart_id").alias("h_cp"),
-        F.col("prob").alias("p_h"),
-    )
-    # literal match rows can never join on e (entity-id range; see
-    # evidence_expansion) — prune them before the m_e shuffle.
-    m_e = matches_sub.filter(~F.col("is_lit")).select(
-        F.col("ent_id").alias("e"),
-        F.col("counterpart_id").alias("e_cp"),
-        F.col("prob").alias("p_e"),
-    )
+    cand_base, facts_r = _expansion_inputs(kg_l, kg_r, matches_sub, cfg.theta)
     # cand_base is consumed by norm, numerator, and (if ent_align) the
     # expansion — pin it; it is O(matched facts), never hub-expanded.
-    cand_base = facts_l.join(m_h, "h").join(m_e, "e", "left").persist()
-    facts_r = kg_r.triples.filter(~F.col("obj_is_lit")).select(
-        F.col("subj").alias("h_cp"), F.col("pred").alias("r2"), F.col("obj").alias("t2")
-    )
+    cand_base = cand_base.persist()
     rel_lazy = rel_align_update(cand_base, facts_r, cfg.const)
     cands = None
     if ent_align:
         # The hub-head expansion has exactly ONE consumer (the candidate
         # scorer); its δ-filter drops hub garbage before the product-agg
         # shuffle, so the wide intermediate is streamed, never stored.
-        # Functionality attaches to the JOIN INPUTS (one broadcast probe
-        # per cand/fact row) so candidate_scores does not probe it once
-        # per expansion row — see its probe-economy note.
-        fun_l_map = kg_l.functionality.select(
-            F.col("pred_id").alias("r"), F.col("functionality").alias("fun_l")
-        )
-        fun_r_map = kg_r.functionality.select(
-            F.col("pred_id").alias("r2"), F.col("functionality").alias("fun_r")
-        )
-        cand_x = cand_base.join(F.broadcast(fun_l_map), "r", "left")
-        facts_x = facts_r.join(F.broadcast(fun_r_map), "r2", "left")
-        if cfg.salt_buckets > 1:
-            from prase_spark.skew import salted_join
-
-            expanded = salted_join(cand_x, facts_x, "h_cp", cfg.salt_buckets)
-        elif cfg.salt_buckets == 0:
-            # AUTO (default): guard against CATASTROPHIC product skew —
-            # hub counterparts whose per-key row product would pin one
-            # task for minutes. AQE's skew split keys off input partition
-            # sizes and cannot touch this class (a 3k x 3k hub has tiny
-            # inputs and a 9M-row output). The threshold is absolute and
-            # high (product_hot_keys default 50M): the r6 A/B showed that
-            # below ~10M-row products the expansion stage is CPU-bound,
-            # not straggler-bound, and salting only added overhead — so
-            # ordinary skew stays on the plain join and the rewrite
-            # engages only where the plain plan would effectively hang.
-            # The hot-key set is a collected driver list (capped at 200),
-            # so the hot/cold split compiles to literal isin() filters
-            # fused into the scans — no semi/anti-join stages.
-            # salt_buckets=1 forces the plain join.
-            from prase_spark.skew import product_hot_keys
-
-            spark = cand_base.sparkSession
-            # size gate: a >=50M-row per-key product needs >=~7.1k rows of
-            # one key on each side, so corpora under 5M facts per side
-            # cannot reach it at sane fan-outs — skip even the (cheap)
-            # detection job there; the memoized count is free after the
-            # first iteration
-            hot_rows = (
-                product_hot_keys(cand_base, facts_r, "h_cp")
-                if kg_r.triple_count() >= 5_000_000
-                else []
-            )
-            if hot_rows:
-                keys = [r["h_cp"] for r in hot_rows]
-                # enough (key, salt) combos to spread over the cluster:
-                # ~4 combos per partition slot (guide §2.5 — too few
-                # distinct combos leaves hash-collision lumps), bounded
-                # by the largest product so tiny hubs aren't over-split
-                dp = spark.sparkContext.defaultParallelism
-                max_out = int(hot_rows[0]["__pc"]) * int(hot_rows[0]["__bc"])
-                k = min(
-                    max(2, (4 * dp) // max(1, len(keys)) + 1),
-                    max(2, -(-max_out // 500_000)),
-                )
-                cb_hot = cand_x.filter(F.col("h_cp").isin(keys))
-                cb_cold = cand_x.filter(~F.col("h_cp").isin(keys))
-                fr_hot = facts_x.filter(F.col("h_cp").isin(keys))
-                fr_cold = facts_x.filter(~F.col("h_cp").isin(keys))
-                # scatter the cand side by a deterministic full-row hash,
-                # replicate the (narrower) facts side to every bucket
-                scattered = cb_hot.withColumn(
-                    "__salt",
-                    F.pmod(
-                        F.xxhash64(*[F.col(c) for c in cb_hot.columns]), F.lit(k)
-                    ).cast("int"),
-                )
-                replicated = fr_hot.withColumn(
-                    "__salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
-                )
-                # the hot leg MUST be a shuffle join: a broadcast join
-                # would drop the exchange and leave the exploded copies
-                # sitting in the hub's original partitions (the salt only
-                # rebalances if rows actually move by (h_cp, __salt))
-                expanded = (
-                    scattered.hint("shuffle_hash")
-                    .join(replicated, ["h_cp", "__salt"])
-                    .drop("__salt")
-                    .unionByName(cb_cold.join(fr_cold, "h_cp"))
-                )
-            else:
-                expanded = cand_x.join(facts_x, "h_cp")
-        else:
-            expanded = cand_x.join(facts_x, "h_cp")
-        expanded = expanded.select(
-            "e", "r", "p_h", "e_cp", "p_e", "r2", "t2", "fun_l", "fun_r"
-        )
+        expanded = _expand(kg_l, kg_r, cand_base, facts_r)
         cands_lazy = entity_candidates(
-            expanded, kg_l, kg_r, rel_align_l, rel_align_r, cfg, init,
+            expanded, rel_align_l, rel_align_r, cfg, init,
             embeddings_l, embeddings_r, fusion=fusion,
         )
         # Jacobi makes rel_new and cands mutually independent (rel_new is

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prase_spark.checkpoint import load_state, roundtrip_state
+from prase_spark.concurrency import materialize_concurrently
 from prase_spark.config import ParisConfig
 from prase_spark.evaluate import evaluate_alignment
 from prase_spark.kgbuild import KGFrames, build_kg
@@ -49,6 +50,35 @@ def bootstrap_seed(
     return name_seed_matches(kg_l, kg_r, **(name_seed_kwargs or {}))
 
 
+def _fixpoint(
+    kg_l: KGFrames,
+    kg_r: KGFrames,
+    state: AlignState,
+    cfg: ParisConfig,
+    gold: DataFrame | None,
+    embeddings_l: DataFrame | None,
+    embeddings_r: DataFrame | None,
+    checkpoint: bool,
+) -> AlignmentRun:
+    """Run PARIS iterations from ``state`` until ``cfg.iterations``; with
+    ``checkpoint`` each new state round-trips through parquet under
+    ``cfg.checkpoint_dir`` (resume point), and with ``gold`` each one is
+    evaluated into ``run.evals``."""
+    run = AlignmentRun(state=state)
+    while run.state.iter_num < cfg.iterations:
+        nxt = run_iteration(
+            kg_l, kg_r, run.state, cfg,
+            embeddings_l=embeddings_l, embeddings_r=embeddings_r,
+        )
+        if checkpoint:
+            nxt = roundtrip_state(nxt, cfg.checkpoint_dir)
+        # else: run_iteration already materialized every state frame once
+        run.state = nxt
+        if gold is not None:
+            run.evals.append(evaluate_alignment(nxt.matches_sub, gold))
+    return run
+
+
 def align(
     spark: SparkSession,
     kg_l: KGFrames,
@@ -70,19 +100,7 @@ def align(
     else:
         sub, sup = bootstrap_seed(kg_l, kg_r, seed_mode, name_seed_kwargs)
         state = init_state(spark, sub, sup)
-    run = AlignmentRun(state=state)
-    while run.state.iter_num < cfg.iterations:
-        nxt = run_iteration(
-            kg_l, kg_r, run.state, cfg,
-            embeddings_l=embeddings_l, embeddings_r=embeddings_r,
-        )
-        if checkpoint:
-            nxt = roundtrip_state(nxt, cfg.checkpoint_dir)
-        # else: run_iteration already materialized every state frame once
-        run.state = nxt
-        if gold is not None:
-            run.evals.append(evaluate_alignment(nxt.matches_sub, gold))
-    return run
+    return _fixpoint(kg_l, kg_r, state, cfg, gold, embeddings_l, embeddings_r, checkpoint)
 
 
 def prase_feedback_align(
@@ -152,18 +170,7 @@ def prase_feedback_align(
         sub_u, sup_u = load_seed_links(seed_links, kg_l, kg_r, prob_scale=load_weight)
         state.matches_sub = force_merge(state.matches_sub, sub_u)
         state.matches_sup = force_merge(state.matches_sup, sup_u)
-    run = AlignmentRun(state=state)
-    while run.state.iter_num < cfg.iterations:
-        nxt = run_iteration(
-            kg_l, kg_r, run.state, cfg,
-            embeddings_l=embeddings_l, embeddings_r=embeddings_r,
-        )
-        if checkpoint:
-            nxt = roundtrip_state(nxt, cfg.checkpoint_dir)
-        run.state = nxt
-        if gold is not None:
-            run.evals.append(evaluate_alignment(nxt.matches_sub, gold))
-    return run
+    return _fixpoint(kg_l, kg_r, state, cfg, gold, embeddings_l, embeddings_r, checkpoint)
 
 
 def alignment_results(
@@ -306,10 +313,8 @@ def build_kgs_from_raw(
     independent, and build_kg is eager in its expensive parts (dense-id
     localCheckpoints, node/predicate persists), so they run as concurrent
     driver-thread jobs — one build's coordination gaps execute the
-    other's tasks (paris.materialize_concurrently; same
-    PRASE_SERIAL_CHECKPOINTS=1 fallback)."""
-    from prase_spark.paris import materialize_concurrently
-
+    other's tasks (concurrency.materialize_concurrently; same
+    PRASE_SERIAL_CHECKPOINTS fallback)."""
     kg_l, kg_r = materialize_concurrently(
         lambda: build_kg(raw_l), lambda: build_kg(raw_r)
     )

@@ -1,17 +1,13 @@
-"""Explicit skew handling for hub-entity joins (north_rule: "partitioning /
-shuffle / skew handled explicitly"; SURVEY.md §4).
+"""Explicit skew handling for the PARIS expansion join (north_rule:
+"partitioning / shuffle / skew handled explicitly"; SURVEY.md §4).
 
-AQE's skew-join splitting is the always-on backstop (config.py). This module
-adds targeted hot-key salting for the PARIS expansion join, where a handful
-of hub counterparts (countries, years-as-literals) can dominate a partition:
-
-1. sketch the build side's key frequencies (one cheap agg),
-2. split both sides into hot / cold key sets,
-3. replicate the hot build rows ``salt_buckets`` times and scatter the hot
-   probe rows by a hash salt, join, then union with the plain cold join.
-
-The salted join is exactly equivalent to the plain join (every probe row
-meets every matching build row exactly once).
+AQE's skew-join splitting is the always-on backstop (config.py). It keys
+off shuffle INPUT partition sizes, so it cannot touch the skew class of the
+hub-head expansion: a three-way path join whose per-key OUTPUT is the
+product of the per-key input counts (a 3k x 3k hub has tiny inputs and a
+9M-row output). :func:`guarded_join` detects exactly that product and
+salts only the keys where it is catastrophic; this module owns that
+policy and its two thresholds.
 """
 
 from __future__ import annotations
@@ -19,48 +15,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def hot_key_counts(df: DataFrame, key: str, min_rows: int = 100_000, top_k: int = 200) -> DataFrame:
-    """Frequency-sketch the join key: (key, __cnt) for keys with ≥ min_rows
-    occurrences (cap top_k). One groupBy; the counts double as the
-    scatter-direction signal so no extra pass is needed."""
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("__cnt"))
-        .filter(F.col("__cnt") >= min_rows)
-        .orderBy(F.desc("__cnt"))
-        .limit(top_k)
-    )
-
-
-def hot_keys(df: DataFrame, key: str, min_rows: int = 100_000, top_k: int = 200) -> DataFrame:
-    """Hot join keys only (see hot_key_counts)."""
-    return hot_key_counts(df, key, min_rows, top_k).select(key)
+# Size gate: a >= HOT_PRODUCT_ROWS per-key product needs >= ~7.1k rows of
+# one key on each side, so build sides under this many facts cannot reach
+# it at sane fan-outs — the guard skips even its (cheap) detection job.
+GUARD_MIN_FACTS = 5_000_000
+# Per-key output rows (probe rows x build rows) at which a key is salted.
+# Deliberately absolute and high: the r6 A/B at sf0.1 showed the expansion
+# stage is CPU-bound, not straggler-bound, below ~10M-row products
+# (salting doubled stage CPU for no wall gain), so the guard engages only
+# where one task would run for minutes — the catastrophic class, not the
+# merely-uneven one.
+HOT_PRODUCT_ROWS = 50_000_000
 
 
 def product_hot_keys(
     probe: DataFrame,
     build: DataFrame,
     key: str,
-    min_out_rows: int = 50_000_000,
+    min_out_rows: int,
     top_k: int = 200,
 ) -> list:
     """Join keys whose OUTPUT contribution (probe rows x build rows) is at
     least ``min_out_rows`` — returned as collected rows
     ``(key, __pc, __bc)``, largest product first.
 
-    This is the skew class AQE cannot fix: its skew-join split looks at
-    shuffle INPUT partition sizes, but a hub key with 3k rows on each side
-    has tiny inputs and a 9M-row join output, so the product lands
-    unsplit on one task (r6 measurement: 5 hub keys = 82% of the PARIS
-    expansion volume). Two per-key count aggs + a tiny join; both inputs
-    are typically already pinned, so this costs one small job.
-
-    The default threshold is deliberately ABSOLUTE and high: the r6 A/B
-    at sf0.1 showed the expansion stage is CPU-bound, not straggler-bound,
-    below ~10M-row products (salting doubled stage CPU for no wall gain),
-    so the guard should only engage where one task would run for minutes —
-    the catastrophic class, not the merely-uneven one."""
+    r6 measurement: 5 hub keys = 82% of the PARIS expansion volume. Two
+    per-key count aggs + a tiny join; both inputs are typically already
+    pinned, so this costs one small job. NULL keys never match an
+    equi-join, and the inner join here drops them too."""
     pc = probe.groupBy(key).agg(F.count("*").alias("__pc"))
     bc = build.groupBy(key).agg(F.count("*").alias("__bc"))
     return (
@@ -72,75 +54,54 @@ def product_hot_keys(
     )
 
 
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    key: str,
-    salt_buckets: int,
-    hot: DataFrame | None = None,
-    hot_min_rows: int = 100_000,
-    scatter: str = "auto",
+def guarded_join(
+    probe: DataFrame, build: DataFrame, key: str, build_facts: int
 ) -> DataFrame:
-    """probe ⋈ build on ``key`` with hot keys salted ``salt_buckets`` ways.
+    """``probe ⋈ build`` on ``key`` with the product-skew guard: the same
+    row multiset as the plain join, which it is whenever ``build_facts``
+    is under GUARD_MIN_FACTS or no key's product reaches HOT_PRODUCT_ROWS.
 
-    Equivalent row multiset to ``probe.join(build, key)``. The hot-key set
-    is broadcast (tiny); cold traffic takes the normal shuffle join.
-
-    ``scatter`` picks which side is split across salt buckets (the OTHER
-    side's hot rows are replicated to every bucket, multiplying its shuffle
-    volume by salt_buckets — so scatter the frequency-heavy side):
-    - "probe"/"build": fixed direction;
-    - "auto" (default): sketch hot-key row counts on BOTH sides (two cheap
-      aggs + a 2-value collect) and scatter whichever carries more hot
-      rows. For the PARIS hub-head join either side can dominate (hub
-      literals blow up the probe, hub entities the build), so a fixed
-      direction is a perf inversion half the time.
-    """
-    if salt_buckets <= 1:
+    Otherwise the hot keys (a collected driver list, capped at 200) split
+    both sides by literal isin() filters fused into the scans — no
+    semi/anti-join stages. Hot probe rows are scattered over ``k`` salt
+    buckets by a deterministic full-row hash, hot build rows replicated to
+    every bucket, and the salted leg is unioned with the plain cold join."""
+    hot_rows = (
+        product_hot_keys(probe, build, key, HOT_PRODUCT_ROWS)
+        if build_facts >= GUARD_MIN_FACTS
+        else []
+    )
+    if not hot_rows:
         return probe.join(build, key)
-    if hot is None:
-        # the sketch aggregates are tiny (≤ top_k rows) — collect them once;
-        # their counts decide the scatter direction with NO extra pass over
-        # probe/build (auto previously cost two full count() jobs)
-        hp = {r[key]: r["__cnt"] for r in hot_key_counts(probe, key, hot_min_rows).collect()}
-        hb = {r[key]: r["__cnt"] for r in hot_key_counts(build, key, hot_min_rows).collect()}
-        # NULL keys are a classic skew source but never match an equi-join:
-        # they belong on the cold path (where the inner join drops them,
-        # exactly like the plain join would). Keeping None in the hot set
-        # would also crash the sort (None is unorderable against int/str).
-        hp = {k: v for k, v in hp.items() if k is not None}
-        hb = {k: v for k, v in hb.items() if k is not None}
-        keys = sorted(set(hp) | set(hb))
-        spark = probe.sparkSession
-        hot = spark.createDataFrame([(k,) for k in keys], probe.select(key).schema)
-        if scatter == "auto":
-            scatter = "probe" if sum(hp.values()) >= sum(hb.values()) else "build"
-    elif scatter == "auto":
-        # caller-supplied hot set carries no counts; default to probe
-        scatter = "probe"
-    hot = F.broadcast(hot.select(F.col(key)).distinct())
-
-    probe_hot = probe.join(hot, key, "left_semi")
-    probe_cold = probe.join(hot, key, "left_anti")
-    build_hot = build.join(hot, key, "left_semi")
-    build_cold = build.join(hot, key, "left_anti")
-
-    scatter_df, replicate_df = (
-        (probe_hot, build_hot) if scatter == "probe" else (build_hot, probe_hot)
+    keys = [r[key] for r in hot_rows]
+    # enough (key, salt) combos to spread over the cluster: ~4 combos per
+    # partition slot (guide §2.5 — too few distinct combos leaves
+    # hash-collision lumps), bounded by the largest product so tiny hubs
+    # aren't over-split
+    dp = probe.sparkSession.sparkContext.defaultParallelism
+    max_out = int(hot_rows[0]["__pc"]) * int(hot_rows[0]["__bc"])
+    k = min(
+        max(2, (4 * dp) // max(1, len(keys)) + 1),
+        max(2, -(-max_out // 500_000)),
     )
-    # scatter rows across buckets (deterministic: hash of the full row — no
-    # monotonically_increasing_id, which breaks replay/retry determinism);
-    # replicate the other side's rows to all buckets
-    scattered = scatter_df.withColumn(
+    probe_hot = probe.filter(F.col(key).isin(keys))
+    scattered = probe_hot.withColumn(
         "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in scatter_df.columns]), F.lit(salt_buckets)).cast("int"),
+        F.pmod(F.xxhash64(*[F.col(c) for c in probe_hot.columns]), F.lit(k)).cast("int"),
     )
-    buckets = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("__salt")
-    replicated = replicate_df.select("*", buckets)
-
-    if scatter == "probe":
-        hot_joined = scattered.join(replicated, [key, "__salt"]).drop("__salt")
-    else:
-        hot_joined = replicated.join(scattered, [key, "__salt"]).drop("__salt")
-    cold_joined = probe_cold.join(build_cold, key)
-    return hot_joined.unionByName(cold_joined)
+    replicated = build.filter(F.col(key).isin(keys)).withColumn(
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
+    )
+    cold = probe.filter(~F.col(key).isin(keys)).join(
+        build.filter(~F.col(key).isin(keys)), key
+    )
+    # the hot leg MUST be a shuffle join: a broadcast join would drop the
+    # exchange and leave the exploded copies sitting in the hub's original
+    # partitions (the salt only rebalances if rows actually move by
+    # (key, __salt))
+    return (
+        scattered.hint("shuffle_hash")
+        .join(replicated, [key, "__salt"])
+        .drop("__salt")
+        .unionByName(cold)
+    )

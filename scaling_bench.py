@@ -116,7 +116,7 @@ empty = spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob 
 
 def kernel():
     expanded = evidence_expansion(kg1, kg2, sub, cfg.theta)
-    return candidate_scores(expanded, kg1, kg2, empty, empty, cfg, init=True).count()
+    return candidate_scores(expanded, empty, empty, cfg, init=True).count()
 
 n_cand = kernel()  # warmup: codegen + python workers + heap steady state
 t0 = time.time()
@@ -136,7 +136,6 @@ from prase_spark.config import get_spark, ParisConfig
 
 cpus = int(sys.argv[1])
 n_ent = int(sys.argv[2])
-salt = int(os.environ.get("PRASE_SALT_BUCKETS", "0"))
 iters = int(os.environ.get("PRASE_BENCH_ITERS", "3"))
 spark = get_spark("scaling_iters", master=f"local[{{cpus}}]", shuffle_partitions=max(cpus, 8))
 spark.sparkContext.setLogLevel("ERROR")
@@ -166,14 +165,14 @@ kg1.functionality.count(); kg2.functionality.count(); kg1.nodes.count(); kg2.nod
 
 sub, sup = literal_seed_matches(kg1, kg2)
 state = init_state(spark, sub, sup)
-cfg = ParisConfig(iterations=iters, salt_buckets=salt)
+cfg = ParisConfig(iterations=iters)
 iter_secs = []
 for i in range(iters):
     t0 = time.time()
     state = run_iteration(kg1, kg2, state, cfg)
     state.matches_sub.count()
     iter_secs.append(round(time.time() - t0, 3))
-print(json.dumps({{"cpus": cpus, "facts": n_facts, "salt_buckets": salt,
+print(json.dumps({{"cpus": cpus, "facts": n_facts,
                    "iter_secs": iter_secs,
                    "sec": round(sum(iter_secs), 3),
                    "facts_per_sec": round(n_facts * iters / sum(iter_secs), 1)}}))
@@ -358,32 +357,21 @@ def run_level(repo: str, cpus: int, pages: int, workload: str = "extract", kg_en
     return json.loads(line)
 
 
-def run_iters_comparison(repo: str, cpus: int, kg_ents: int, salt_buckets: int) -> None:
-    """Per-iteration flatness + salting on/off on a hub-planted KG pair.
-    Appends the evidence table to BENCH.md."""
-    results = []
-    for salt in (0, salt_buckets):
-        os.environ["PRASE_SALT_BUCKETS"] = str(salt)
-        r = run_level(repo, cpus, 0, "paris-iters", kg_ents)
-        results.append(r)
-        print(json.dumps(r))
-    os.environ.pop("PRASE_SALT_BUCKETS", None)
+def run_iters(repo: str, cpus: int, kg_ents: int) -> None:
+    """Per-iteration flatness on a hub-planted KG pair (the product-skew
+    guard decides on its own whether the hub is salted). Appends the
+    evidence table to BENCH.md."""
+    r = run_level(repo, cpus, 0, "paris-iters", kg_ents)
+    print(json.dumps(r))
+    its = r["iter_secs"] + ["-"] * (3 - len(r["iter_secs"]))
     with open(os.path.join(repo, "BENCH.md"), "a", encoding="utf8") as f:
         f.write(
-            f"\n## Per-iteration flatness + salting (hub-planted 2x{kg_ents}-entity KGs, "
-            f"{results[0]['facts']} facts, {cpus} cores)\n\n"
-            "| salt_buckets | iter1 s | iter2 s | iter3 s | total s |\n|---|---|---|---|---|\n"
-        )
-        for r in results:
-            its = r["iter_secs"] + ["-"] * (3 - len(r["iter_secs"]))
-            f.write(
-                f"| {r['salt_buckets']} | {its[0]} | {its[1]} | {its[2]} | {r['sec']} |\n"
-            )
-        f.write(
+            f"\n## Per-iteration flatness (hub-planted 2x{kg_ents}-entity KGs, "
+            f"{r['facts']} facts, {cpus} cores)\n\n"
+            "| iter1 s | iter2 s | iter3 s | total s |\n|---|---|---|---|\n"
+            f"| {its[0]} | {its[1]} | {its[2]} | {r['sec']} |\n"
             "\nPer-iteration wall times must stay flat (lineage truncation via "
-            "per-iteration localCheckpoint); the salted row exercises the "
-            "explicit hot-key path on the planted hub (AQE skew-join stays on "
-            "in both rows, so the delta is salting's marginal value).\n"
+            "per-iteration localCheckpoint).\n"
         )
 
 
@@ -398,7 +386,6 @@ def main():
         default="extract",
     )
     ap.add_argument("--kg-ents", type=int, default=400000)
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument(
         "--repeats", type=int, default=1,
         help="interleaved attempts per level: legs alternate (lo,hi),(hi,lo),"
@@ -420,7 +407,7 @@ def main():
     repo = os.path.dirname(os.path.abspath(__file__))
 
     if args.workload == "paris-iters":
-        run_iters_comparison(repo, args.high, args.kg_ents, args.salt_buckets)
+        run_iters(repo, args.high, args.kg_ents)
         return
 
     # hardware-ceiling stamp (same doctrine as bench.py): the raw-CPU

@@ -22,7 +22,7 @@ def test_candidate_plan_hygiene(spark):
     cfg = ParisConfig()
     empty = spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob DOUBLE")
     cands = candidate_scores(
-        evidence_expansion(kg_l, kg_r, sub, cfg.theta), kg_l, kg_r, empty, empty, cfg, True
+        evidence_expansion(kg_l, kg_r, sub, cfg.theta), empty, empty, cfg, True
     )
     plan = _plan(cands)
     assert "CartesianProduct" not in plan

@@ -61,11 +61,11 @@ def test_pandas_fusion_hook(spark):
         return 0.8 * prob + 0.2 * float(np.dot(x, y) / (np.linalg.norm(x) * np.linalg.norm(y)))
 
     custom = entity_candidates(
-        expanded, kg_l, kg_r, st.rel_align_l, st.rel_align_r, cfg, init=False,
+        expanded, st.rel_align_l, st.rel_align_r, cfg, init=False,
         embeddings_l=emb_l, embeddings_r=emb_r, fusion=pandas_fusion(ref_fusion),
     )
     native = entity_candidates(
-        expanded, kg_l, kg_r, st.rel_align_l, st.rel_align_r, cfg, init=False,
+        expanded, st.rel_align_l, st.rel_align_r, cfg, init=False,
         embeddings_l=emb_l, embeddings_r=emb_r,
     )
     got_c = {r["ent_id"]: (r["counterpart_id"], round(r["prob"], 6)) for r in custom.collect()}

@@ -118,6 +118,31 @@ def test_feedback_runs_additional_iterations(spark, fx):
     assert before == after
 
 
+def test_feedback_without_priors_equals_align(spark, fx):
+    """With no prior state, reset or seed links, the feedback loop is the
+    plain fixpoint: the same final state as align(checkpoint=False)."""
+    cfg = ParisConfig(iterations=2)
+
+    def final(run):
+        s = run.state
+        matches = lambda df: {  # noqa: E731
+            (r["ent_id"], r["counterpart_id"], round(r["prob"], 9), r["is_lit"])
+            for r in df.collect()
+        }
+        rels = lambda df: {  # noqa: E731
+            (r["pred_id"], r["counterpart_pred_id"], round(r["prob"], 9))
+            for r in df.collect()
+        }
+        return (
+            s.iter_num, matches(s.matches_sub), matches(s.matches_sup),
+            rels(s.rel_align_l), rels(s.rel_align_r),
+        )
+
+    plain = final(align(spark, fx["kg_l"], fx["kg_r"], cfg, checkpoint=False))
+    feedback = final(prase_feedback_align(spark, fx["kg_l"], fx["kg_r"], cfg))
+    assert feedback == plain and plain[0] == 2 and all(plain[1:])
+
+
 def test_evaluate_alignment_bucketed_exact(spark):
     """The threshold-grid bucketing keeps the sweep exact for off-grid probs
     while collecting <= len(grid)+1 rows."""

@@ -9,6 +9,8 @@ import sys
 
 sys.path.insert(0, ".")
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from prase_spark.config import ParisConfig, get_spark  # noqa: E402
 
 
@@ -18,7 +20,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from prase_spark.kgbuild import build_kg
-    from prase_spark.paris import half_iteration, init_state
+    from prase_spark.paris import init_state
     from prase_spark.seed import literal_seed_matches
     from prase_spark.tpch_kg import tpch_raw_triples
 
@@ -33,28 +35,14 @@ def main():
     print("=" * 70, "\nLITERAL SEED JOIN PLAN\n", "=" * 70)
     sub.explain("formatted")
 
-    # candidate scoring plan (the PARIS kernel) — build it without the
-    # eager localCheckpoint so the full DAG is visible
-    from pyspark.sql import functions as F
-
-    from prase_spark.paris import entity_candidates
+    # candidate scoring plan (the PARIS kernel): the production expansion
+    # and scorer, without the iteration's eager localCheckpoint so the
+    # full DAG is visible
+    from prase_spark.paris import candidate_scores, evidence_expansion
 
     cfg = ParisConfig()
-    facts_l = kg1.triples.filter(~F.col("obj_is_lit")).select(
-        F.col("subj").alias("h"), F.col("pred").alias("r"), F.col("obj").alias("e")
-    )
-    m_h = state.matches_sub.filter(F.col("prob") >= cfg.theta).select(
-        F.col("ent_id").alias("h"), F.col("counterpart_id").alias("h_cp"), F.col("prob").alias("p_h")
-    )
-    m_e = state.matches_sub.select(
-        F.col("ent_id").alias("e"), F.col("counterpart_id").alias("e_cp"), F.col("prob").alias("p_e")
-    )
-    facts_r = kg2.triples.filter(~F.col("obj_is_lit")).select(
-        F.col("subj").alias("h_cp"), F.col("pred").alias("r2"), F.col("obj").alias("t2")
-    )
-    cand_base = facts_l.join(m_h, "h").join(m_e, "e", "left")
-    expanded = cand_base.join(facts_r, "h_cp").select("e", "r", "p_h", "e_cp", "p_e", "r2", "t2")
-    cands = entity_candidates(expanded, kg1, kg2, state.rel_align_l, state.rel_align_r, cfg, init=True)
+    expanded = evidence_expansion(kg1, kg2, state.matches_sub, cfg.theta)
+    cands = candidate_scores(expanded, state.rel_align_l, state.rel_align_r, cfg, init=True)
     print("=" * 70, "\nPARIS CANDIDATE PLAN\n", "=" * 70)
     cands.explain("formatted")
 
