@@ -14,6 +14,9 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
 from prase_spark.config import env_flag
 
 
@@ -23,9 +26,14 @@ def materialize_concurrently(*thunks):
 
     ``PRASE_SERIAL_CHECKPOINTS`` (a config.env_flag: 1/true/yes/on) falls
     back to sequential execution (A/B lever; also the escape hatch if a
-    cluster's scheduler pools are configured to starve concurrent jobs)."""
+    cluster's scheduler pools are configured to starve concurrent jobs).
+
+    Each thunk runs with its own copy of the caller's local properties
+    (job group, description, pool) and session tags, so its jobs are
+    labelled like the caller's; this needs an active SparkSession."""
     if env_flag("PRASE_SERIAL_CHECKPOINTS") or len(thunks) == 1:
         return tuple(t() for t in thunks)
+    session = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
+        futures = [ex.submit(inheritable_thread_target(session)(t)) for t in thunks]
         return tuple(f.result() for f in futures)

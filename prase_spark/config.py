@@ -7,7 +7,6 @@ theta=0.1, delta=0.01, epsilon=1.01, const=10.0, iteration=3 (test.py:127 uses 1
 from __future__ import annotations
 
 import os
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -25,7 +24,6 @@ class ParisConfig:
     fusion_cosine_weight: float = 0.2
     # engine knobs (no reference analog; scale controls)
     checkpoint_dir: str = field(default="/tmp/prase_spark_ckpt")
-    checkpoint_every: int = 1
 
 
 # Generated classes kept by Spark's codegen cache (JVM-wide, driver and
@@ -51,15 +49,6 @@ def env_flag(name: str) -> bool:
     return raw in _FLAG_TRUE
 
 
-def _task_slots(master: str, default: int) -> int:
-    """Task slots of a ``local``, ``local[N]`` or ``local[N,F]`` master;
-    ``default`` for any other master, ``local[*]`` included."""
-    m = re.fullmatch(r"local(?:\[(\d+)(?:,\d+)?\])?", master.strip())
-    if m is None:
-        return default
-    return int(m.group(1) or 1)
-
-
 def get_spark(
     app_name: str = "prase_spark",
     master: str | None = None,
@@ -76,6 +65,9 @@ def get_spark(
     Spark's default 100, so repeated passes and PARIS iterations reuse
     compiled code. It is a static conf: it takes effect only when this
     call creates the JVM's first session.
+
+    It runs no Spark job: JIT, code generation and Python-worker spawn are
+    paid by the first query that needs them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     master = master or os.environ.get("PRASE_SPARK_MASTER", f"local[{cpus}]")
@@ -119,34 +111,4 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    session = builder.getOrCreate()
-    # Session-init warmup, same doctrine as the -Xms pre-sizing above:
-    # executor-thread spin-up, codegen/JIT compilation and shuffle-writer
-    # initialization otherwise land inside whichever query runs first in
-    # the session (measured: a 3 s throwaway shuffle at init takes the
-    # first real query from ~12 s to ~9 s at sf0.1). Touches no user data
-    # and computes nothing any query reuses. PRASE_NO_SESSION_WARMUP=1
-    # skips it (e.g. for micro-benchmarks of cold-start itself).
-    if not env_flag("PRASE_NO_SESSION_WARMUP") and not getattr(session, "_prase_warmed", False):
-        (
-            session.range(1_000_000, numPartitions=8)
-            .selectExpr("id % 97 AS k", "id AS v")
-            .groupBy("k")
-            .count()
-            .count()
-        )
-        # Pre-spawn the Python worker pool + Arrow serialization path the
-        # same way: the first mapInPandas in a session otherwise pays
-        # daemon fork + worker spawn per core inside the query that runs
-        # it (~0.5-1 s at local[32] measured on the extraction path).
-        # Identity over one one-row partition per task slot of the
-        # session's actual master (an existing session keeps its own).
-        sc = session.sparkContext
-        slots = _task_slots(sc.master, sc.defaultParallelism)
-        (
-            session.range(slots, numPartitions=slots)
-            .mapInPandas(lambda it: it, "id bigint")
-            .count()
-        )
-        session._prase_warmed = True
-    return session
+    return builder.getOrCreate()

@@ -200,19 +200,17 @@ def lsh_argmax(
     n_bits: int = 128,
     n_bands: int = 8,
     seed: int = 42,
-    metric: str = "dot",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Approximate J7: argmax within LSH-blocked candidates.
 
-    ``metric='dot'`` (default) ranks candidates by raw dot product — the
-    SAME rule as brute_force_argmax and the reference's matmul argmax
+    Ranks candidates by raw dot product — the SAME rule as
+    brute_force_argmax and the reference's matmul argmax
     (objects/KGs.py:273-275), so crossing the dispatcher's size gate never
     changes the ranking metric, only restricts the candidate set. Note the
     hyperplane blocking itself is angular: a counterpart that wins on dot
     through sheer norm despite a poor angle can fall outside the candidate
-    set (recall caveat, tested ≥0.9 on the fixture). 'cosine' is offered
-    for normalized-embedding workloads."""
+    set (recall caveat, tested ≥0.9 on the fixture)."""
     pairs = lsh_candidate_pairs(
         emb_l, emb_r, dim, n_bits, n_bands, seed, max_bucket_size=max_bucket_size
     )
@@ -221,8 +219,7 @@ def lsh_argmax(
     dot = F.aggregate(
         F.zip_with("emb_l", "emb_r", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-    score = dot if metric == "dot" else cosine_expr("emb_l", "emb_r")
-    scored = pairs.join(l, "l_id").join(r, "r_id").withColumn("cos", score)
+    scored = pairs.join(l, "l_id").join(r, "r_id").withColumn("cos", dot)
     return (
         scored.groupBy("l_id")
         .agg(F.max_by(F.struct("r_id"), F.struct("cos", (-F.col("r_id")).alias("nr"))).alias("b"))

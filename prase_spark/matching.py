@@ -161,28 +161,22 @@ def connected_components(
     max_iter: int = 25,
     src: str = "src",
     dst: str = "dst",
-    method: str = "auto",
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
 
     Returns (node, component) where component = min node id reachable.
-    ``method='auto'`` (default) runs hash-min label propagation — cheapest
-    constant factors for the tiny-diameter clusters dedup/alignment
-    produce — and, if it has not converged after ``max_iter`` rounds
-    (e.g. a crawl-scale redirect/template chain longer than max_iter
-    hops), FALLS BACK to the large-star/small-star alternation, which
-    converges in O(log n) rounds independent of diameter, instead of
-    raising. ``method='star'`` goes straight to the alternation;
-    ``method='hashmin'`` restores the old raise-on-non-convergence
-    behavior. Iterative joins localCheckpoint every round to truncate
-    lineage (mandatory — SURVEY.md §4). ``stats_out`` (dict) receives
-    operator telemetry: ``method`` actually used, ``hashmin_rounds`` /
-    ``star_rounds`` executed — the convergence-behavior numbers an
-    operator watches at crawl scale.
+    Runs hash-min label propagation — cheapest constant factors for the
+    tiny-diameter clusters dedup/alignment produce — and, if it has not
+    converged after ``max_iter`` rounds (e.g. a crawl-scale
+    redirect/template chain longer than max_iter hops), FALLS BACK to the
+    large-star/small-star alternation, which converges in O(log n) rounds
+    independent of diameter. Iterative joins localCheckpoint every round
+    to truncate lineage (mandatory — SURVEY.md §4). ``stats_out`` (dict)
+    receives operator telemetry: ``method`` actually used (``hashmin`` or
+    ``hashmin->star``), ``hashmin_rounds`` / ``star_rounds`` executed —
+    the convergence-behavior numbers an operator watches at crawl scale.
     """
-    if method not in ("auto", "hashmin", "star"):
-        raise ValueError(f"unknown method {method!r}")
     star_rounds = 60  # O(log n) alternation: 60 covers any feasible n
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -191,12 +185,6 @@ def connected_components(
         .persist()
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    if method == "star":
-        if stats_out is not None:
-            stats_out["method"] = "star"
-        out = _star_components(sym, nodes, star_rounds, stats_out)
-        sym.unpersist()
-        return out
     labels = nodes.withColumn("component", F.col("node")).localCheckpoint()
     changed = 0
     hashmin_rounds = 0
@@ -233,23 +221,12 @@ def connected_components(
         stats_out["method"] = "hashmin"
         stats_out["hashmin_rounds"] = hashmin_rounds
     if changed != 0:
-        if method == "auto":
-            # chains longer than max_iter hops: degrade to the O(log n)
-            # star alternation on the ORIGINAL edges (correct from any
-            # start state; restarting avoids mixing the two labelings)
-            if stats_out is not None:
-                stats_out["method"] = "hashmin->star"
-            out = _star_components(sym, nodes, star_rounds, stats_out)
-            sym.unpersist()
-            return out
-        sym.unpersist()
-        # returning partially-propagated labels would silently split real
-        # clusters — fail loudly instead (hash-min needs O(longest chain)
-        # rounds; raise max_iter, or use method='auto'/'star')
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter}; "
-            "the component graph has chains longer than max_iter"
-        )
+        # chains longer than max_iter hops: degrade to the O(log n) star
+        # alternation on the ORIGINAL edges (correct from any start state;
+        # restarting avoids mixing the two labelings)
+        if stats_out is not None:
+            stats_out["method"] = "hashmin->star"
+        labels = _star_components(sym, nodes, star_rounds, stats_out)
     sym.unpersist()
     return labels
 

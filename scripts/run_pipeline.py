@@ -55,9 +55,9 @@ def main() -> None:
 
     from prase_spark.config import ParisConfig
     from prase_spark.extract import pages_to_raw_triples
-    from prase_spark.kgbuild import build_kg, kg_info
+    from prase_spark.kgbuild import kg_info
     from prase_spark.matching import canonical_entity_ids
-    from prase_spark.pipeline import align, materialize, partition_metrics
+    from prase_spark.pipeline import align, build_kgs_from_raw, materialize, partition_metrics
 
     spark = SparkSession.builder.appName("prase_pipeline").getOrCreate()
     t0 = time.time()
@@ -119,7 +119,7 @@ def main() -> None:
 
         raw_l = pages_to_raw_triples(pages_l)
         raw_r = pages_to_raw_triples(pages_r)
-    kg_l, kg_r = build_kg(raw_l), build_kg(raw_r)
+    kg_l, kg_r = build_kgs_from_raw(spark, raw_l, raw_r)
     print("KG_L:", json.dumps(kg_info(kg_l)))
     print("KG_R:", json.dumps(kg_info(kg_r)))
 

@@ -1,5 +1,6 @@
-"""materialize_concurrently: ordering, serial fallback, error paths.
-Pure driver-side semantics — no Spark session needed."""
+"""materialize_concurrently: ordering, serial fallback, error paths, and
+the caller's job group on the jobs its threads submit. The concurrent
+path copies the caller's Spark local properties, so it takes a session."""
 
 import os
 import threading
@@ -10,12 +11,12 @@ import pytest
 from prase_spark.concurrency import materialize_concurrently
 
 
-def test_results_keep_thunk_order():
+def test_results_keep_thunk_order(spark):
     out = materialize_concurrently(lambda: "a", lambda: "b", lambda: "c")
     assert out == ("a", "b", "c")
 
 
-def test_thunks_actually_overlap():
+def test_thunks_actually_overlap(spark):
     gate = threading.Event()
 
     def first():
@@ -52,9 +53,22 @@ def test_single_thunk_runs_inline():
     assert got == ident  # no thread pool for a single thunk
 
 
-def test_exception_propagates():
+def test_exception_propagates(spark):
     def boom():
         raise RuntimeError("thunk failed")
 
     with pytest.raises(RuntimeError, match="thunk failed"):
         materialize_concurrently(lambda: time.sleep(0.01) or 1, boom)
+
+
+def test_jobs_keep_the_callers_job_group(spark, monkeypatch):
+    monkeypatch.delenv("PRASE_SERIAL_CHECKPOINTS", raising=False)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "concurrency_group")
+    try:
+        materialize_concurrently(
+            lambda: spark.range(100).count(), lambda: spark.range(200).count()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("concurrency_group")) >= 2

@@ -1,6 +1,9 @@
 """Literal-seed join (J1), max-merge (A6), bipartite matching (J6),
 connected components — unit semantics tests."""
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from prase_spark.kgbuild import build_kg
@@ -92,25 +95,6 @@ def test_canonical_entity_ids(spark):
     assert ("L", 3) not in by_key
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    """method='hashmin' on a chain longer than max_iter must fail loudly,
-    never return partially-propagated (wrong) labels."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from prase_spark.matching import connected_components
-
-    chain = spark.range(30).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=3, method="hashmin")
-    # and converges fine with enough rounds (hash-min propagates min label
-    # a growing distance per round, so ~log-ish rounds suffice in practice)
-    comp = connected_components(chain, max_iter=31, method="hashmin")
-    assert comp.select("component").distinct().count() == 1
-
-
 def test_connected_components_long_chain_auto_fallback(spark):
     """VERDICT r3 #4: a 100-hop chain (crawl-scale redirect/template
     chains) must DEGRADE to the O(log n) large-star/small-star alternation
@@ -135,29 +119,40 @@ def test_connected_components_long_chain_auto_fallback(spark):
     assert 1 <= stats["star_rounds"] <= 12
 
 
-def test_connected_components_star_matches_hashmin(spark):
-    """method='star' must produce the identical labeling as hash-min on a
-    multi-component graph with chains, cycles, and a star."""
-    from prase_spark.matching import connected_components
+# chain 0..6, cycle 10-11-12-10, star around 20, bridge 6-10
+_MULTI_COMPONENT_EDGES = [
+    *[(i, i + 1) for i in range(6)],
+    (10, 11), (11, 12), (12, 10), (6, 10),
+    (20, 21), (20, 22), (20, 23),
+    (30, 31),
+]
 
-    edges = [
-        # chain 0..6, cycle 10-11-12-10, star around 20, bridge 6-10
-        *[(i, i + 1) for i in range(6)],
-        (10, 11), (11, 12), (12, 10), (6, 10),
-        (20, 21), (20, 22), (20, 23),
-        (30, 31),
-    ]
+
+def _random_edges(seed=7, n_nodes=300, n_edges=320):
+    # 8 components; the farthest node is 10 hops from its component's min
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "edges", [_MULTI_COMPONENT_EDGES, _random_edges()], ids=["multi_component", "random"]
+)
+def test_connected_components_star_fallback_matches_converged(spark, edges):
+    """max_iter=1 forces the large-star/small-star fallback; its labels
+    must equal the converged hash-min run's."""
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    ref = {
-        r["node"]: r["component"]
-        for r in connected_components(df, method="hashmin").collect()
-    }
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, method="star").collect()
-    }
+
+    def labels(**kw):
+        stats = {}
+        comp = connected_components(df, stats_out=stats, **kw)
+        return {r["node"]: r["component"] for r in comp.collect()}, stats["method"]
+
+    ref, ref_method = labels()
+    got, method = labels(max_iter=1)
+    assert (ref_method, method) == ("hashmin", "hashmin->star")
     assert got == ref
-    assert got[12] == 0 and got[23] == 20 and got[31] == 30
+    if edges is _MULTI_COMPONENT_EDGES:
+        assert got[12] == 0 and got[23] == 20 and got[31] == 30
 
 
 def test_align_seed_mode_auto_falls_back_to_names(spark):
