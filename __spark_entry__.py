@@ -30,42 +30,25 @@ _TOKS_SQL = (
 _KG_CACHE: dict = {}
 
 
-def _kg(spark: SparkSession, sf_dir: str, kg: int):
-    """Memoized KG build — the driver runs many gate queries in one
-    session and each TPC-H KG build costs ~30s at sf0.01; the KGFrames are
-    persisted DataFrames, safe to share within a session. Keyed by the
-    stable applicationId (id(spark) can be recycled after GC and would hand
-    back frames bound to a stopped SparkContext); entries from stopped
-    contexts are evicted."""
-    from prase_spark.kgbuild import build_kg
+def _kg_pair(spark: SparkSession, sf_dir: str):
+    """Both TPC-H KGs, memoized as a pair — the driver runs many gate
+    queries in one session and each TPC-H KG build costs ~30s at sf0.01;
+    the KGFrames are persisted DataFrames, safe to share within a session.
+    Keyed by the stable applicationId (id(spark) can be recycled after GC
+    and would hand back frames bound to a stopped SparkContext); entries
+    from stopped contexts are evicted."""
+    from prase_spark.pipeline import build_kgs_from_raw
     from prase_spark.tpch_kg import tpch_raw_triples
-
-    from prase_spark.concurrency import materialize_concurrently
 
     sc = spark.sparkContext
     for k in [k for k in _KG_CACHE if k[0] != sc.applicationId]:
         del _KG_CACHE[k]
-    key = (sc.applicationId, sf_dir, kg)
+    key = (sc.applicationId, sf_dir)
     if key not in _KG_CACHE:
-        other = (sc.applicationId, sf_dir, 3 - kg)
-        if other not in _KG_CACHE:
-            # neither KG cached yet: build the PAIR concurrently so the
-            # first KG-touching gate pays ~max(t1, t2) instead of t1 + t2,
-            # regardless of which gate the queries() rotation runs first
-            built = materialize_concurrently(
-                lambda: build_kg(tpch_raw_triples(spark, sf_dir, kg)),
-                lambda: build_kg(tpch_raw_triples(spark, sf_dir, 3 - kg)),
-            )
-            _KG_CACHE[key], _KG_CACHE[other] = built
-        else:
-            _KG_CACHE[key] = build_kg(tpch_raw_triples(spark, sf_dir, kg))
+        _KG_CACHE[key] = build_kgs_from_raw(
+            spark, tpch_raw_triples(spark, sf_dir, 1), tpch_raw_triples(spark, sf_dir, 2)
+        )
     return _KG_CACHE[key]
-
-
-def _kg_pair(spark: SparkSession, sf_dir: str):
-    """Both TPC-H KGs; :func:`_kg` builds a fully-missing pair
-    concurrently, so this is just the two lookups."""
-    return _kg(spark, sf_dir, 1), _kg(spark, sf_dir, 2)
 
 
 # --------------------------------------------------------------------------
@@ -74,7 +57,7 @@ def _kg_pair(spark: SparkSession, sf_dir: str):
 
 def _q_kg1_functionality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: per-predicate functionality over the INV-doubled KG1."""
-    kg = _kg(spark, sf_dir, 1)
+    kg = _kg_pair(spark, sf_dir)[0]
     # predicates is schema-sized — broadcast beats the SortMergeJoin the
     # planner picks off the checkpointed frames' unknown stats (r6 plan
     # audit: 2 Exchange + 2 Sort removed)
@@ -90,7 +73,7 @@ def _q_kg1_functionality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kg1_dict_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: dense-id dictionary encode of the KG1 node space."""
-    kg = _kg(spark, sf_dir, 1)
+    kg = _kg_pair(spark, sf_dir)[0]
     return kg.nodes.select("ent_id", "name", "is_literal")
 
 
@@ -138,7 +121,7 @@ def _q_top10_attr_functionality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: top-10 attributes by functionality."""
     from prase_spark.kgbuild import top_functionality
 
-    kg = _kg(spark, sf_dir, 1)
+    kg = _kg_pair(spark, sf_dir)[0]
     t = top_functionality(kg, is_attribute=True, inverse=False, num=10)
     return t.select(F.col("name").alias("pred_name"), F.round("func", 9).alias("func"))
 
@@ -147,7 +130,7 @@ def _q_kg_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11/A10: the KG counts report (print_kg_info analog) as one row."""
     from prase_spark.kgbuild import kg_info
 
-    info = kg_info(_kg(spark, sf_dir, 1))
+    info = kg_info(_kg_pair(spark, sf_dir)[0])
     cols = sorted(info)
     return spark.createDataFrame([tuple(int(info[c]) for c in cols)], ", ".join(f"{c} LONG" for c in cols))
 
@@ -2064,7 +2047,7 @@ def _q_name_seed_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-raw-name. prob is the raw int/int double division — bit-identical
     in both engines, no rounding."""
     from prase_spark.datapipe.hashing import poly_hash61
-    from prase_spark.kgbuild import build_kg
+    from prase_spark.pipeline import build_kgs_from_raw
     from prase_spark.seed import name_seed_matches
 
     p = spark.read.parquet(f"{sf_dir}/part.parquet").filter("p_partkey < 300")
@@ -2080,7 +2063,7 @@ def _q_name_seed_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("B "), "p_brand").alias("obj"),
         F.lit(True).alias("is_attr"),
     )
-    kg_l, kg_r = build_kg(raw_l), build_kg(raw_r)
+    kg_l, kg_r = build_kgs_from_raw(spark, raw_l, raw_r)
     sub, sup = name_seed_matches(
         kg_l, kg_r, threshold=0.6, num_hashes=32, bands=16, hash_fn=poly_hash61
     )
@@ -2584,7 +2567,7 @@ _BPE_CACHE: dict = {}
 
 def _bpe(spark: SparkSession, sf_dir: str, k: int = 8):
     """Memoized BPE training over documents — the two bpe gates share
-    one trained (merges, vocab) pair per session/sf (the _kg memo
+    one trained (merges, vocab) pair per session/sf (the _kg_pair memo
     doctrine: keyed by applicationId, stopped-context entries evicted;
     the vocab DataFrame is persisted by bpe_train)."""
     from prase_spark.datapipe.bpetrain import bpe_train
@@ -2646,7 +2629,7 @@ def _q_transe_margin_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the ring fixture)."""
     from prase_spark.transe import train_transe
 
-    kg = _kg(spark, sf_dir, 1)
+    kg = _kg_pair(spark, sf_dir)[0]
     n = int(kg.nodes.agg(F.max("ent_id")).collect()[0][0]) + 1
     rel = kg.triples.filter(~F.col("obj_is_lit"))
     stats: dict = {}
@@ -3543,14 +3526,13 @@ def _q_web_kg_align_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     KG build AND the probabilistic reasoning share one value hash —
     the end-to-end contract of the north rule on actual web markup."""
     from prase_spark.config import ParisConfig
-    from prase_spark.kgbuild import build_kg
-    from prase_spark.concurrency import materialize_concurrently
-    from prase_spark.pipeline import align, alignment_results
+    from prase_spark.pipeline import align, alignment_results, build_kgs_from_raw
     from prase_spark.structured import structured_to_raw_triples
 
-    kg1, kg2 = materialize_concurrently(
-        lambda: build_kg(structured_to_raw_triples(_web_kg_pages(spark, sf_dir, "a"))),
-        lambda: build_kg(structured_to_raw_triples(_web_kg_pages(spark, sf_dir, "b"))),
+    kg1, kg2 = build_kgs_from_raw(
+        spark,
+        structured_to_raw_triples(_web_kg_pages(spark, sf_dir, "a")),
+        structured_to_raw_triples(_web_kg_pages(spark, sf_dir, "b")),
     )
     cfg = ParisConfig(iterations=2)
     run = align(spark, kg1, kg2, cfg, checkpoint=False)
@@ -4991,8 +4973,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     gates), then the r4-recorded headline fixpoints,
     then the r4-recorded stable remainder — those all have fresh r4 driver
     rows, so a tail cut re-confirms old evidence, never loses a first-ever
-    record. KG build order no longer matters for speed: _kg builds a
-    fully-missing TPC-H KG pair concurrently whichever gate asks first.
+    record. KG build order does not matter for speed: _kg_pair builds
+    the TPC-H KG pair (concurrently) for whichever gate asks first.
     tools/check_oracles.py (all 130 gates at final HEAD, this round —
     129 full DuckDB value oracles + the deliberate rows-only
     transe_margin_counts) is recorded in BENCH.md as backup evidence
@@ -5234,10 +5216,11 @@ def _paris_iter_ctes(i: int, fusion: bool = False) -> str:
     boot_sub = f"CASE WHEN below THEN 0.1 ELSE p_sub_raw END" if init else "p_sub_raw"
     boot_sup = f"CASE WHEN below THEN 0.1 ELSE p_sup_raw END" if init else "p_sup_raw"
     not_below = "" if init else "WHERE NOT below"
-    # embedding fusion (entity_candidates, paris.py:209-232): only active
+    # embedding fusion (entity_candidates, paris.py:212-230): only active
     # when init is off (iteration >= 3) and only when BOTH sides carry an
     # embedding. The dot/norm sums are written in Spark's exact fold order
-    # (left-assoc, dim 4) so the doubles are bit-identical across engines.
+    # (left-assoc, dim 4), and the weight multiplies the finished cosine
+    # (embed.cosine_expr), so the doubles are bit-identical across engines.
     if fusion and not init:
         dot = " + ".join(f"el.x{j}*er.x{j}" for j in range(4))
         nl = " + ".join(f"el.x{j}*el.x{j}" for j in range(4))
@@ -5247,8 +5230,8 @@ def _paris_iter_ctes(i: int, fusion: bool = False) -> str:
                     SELECT s.e, s.t2,
                            CASE WHEN el.e IS NOT NULL AND er.e IS NOT NULL
                                 THEN CAST(0.8 AS DOUBLE) * s.score
-                                     + CAST(0.2 AS DOUBLE) * ({dot})
-                                       / (sqrt({nl}) * sqrt({nr}))
+                                     + CAST(0.2 AS DOUBLE) * (({dot})
+                                       / (sqrt({nl}) * sqrt({nr})))
                                 ELSE s.score END AS fused
                     FROM scores_{c} s
                     LEFT JOIN emb_l el ON el.e = s.e

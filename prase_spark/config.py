@@ -35,19 +35,6 @@ class ParisConfig:
 # CPU-seconds).
 CODEGEN_CACHE_ENTRIES = 2000
 
-_FLAG_TRUE = {"1", "true", "yes", "on"}
-_FLAG_FALSE = {"", "0", "false", "no", "off"}
-
-
-def env_flag(name: str) -> bool:
-    """A boolean environment variable parsed by value, case-insensitive:
-    1/true/yes/on are True, unset/empty/0/false/no/off are False, anything
-    else raises ValueError."""
-    raw = os.environ.get(name, "").strip().lower()
-    if raw not in _FLAG_TRUE | _FLAG_FALSE:
-        raise ValueError(f"{name}={raw!r}: expected 0/1/true/false/yes/no/on/off")
-    return raw in _FLAG_TRUE
-
 
 def get_spark(
     app_name: str = "prase_spark",

@@ -79,23 +79,23 @@ def _claims_sup(sub: DataFrame, prob: float) -> DataFrame:
     )
 
 
-def brute_force_argmax(
-    emb_l: DataFrame, emb_r: DataFrame, prob: float = 0.2
-) -> tuple[DataFrame, DataFrame]:
-    """Exact J7 reset path (objects/KGs.py:265-279): row argmax of the
-    similarity matrix, assign ``prob`` both directions. Here argmax is by
-    raw dot product (the reference matmuls unnormalized rows).
-
-    Test-scale only — the LSH path below is the 10^12-row strategy."""
+def _dot_argmax(
+    emb_l: DataFrame, emb_r: DataFrame, prob: float, pairs: DataFrame | None = None
+) -> DataFrame:
+    """J7 argmax: each left entity takes the right entity with the largest
+    raw dot product (the reference matmuls unnormalized rows), ties to the
+    smallest r_id (np.argmax's first-index rule), at ``prob``. Candidates
+    are ``pairs`` (l_id, r_id), or every pair (cross join) when None.
+    Output (ent_id, counterpart_id, prob, is_lit)."""
     l = emb_l.select(F.col("ent_id").alias("l_id"), F.col("embedding").alias("emb_l"))
     r = emb_r.select(F.col("ent_id").alias("r_id"), F.col("embedding").alias("emb_r"))
+    scored = l.crossJoin(r) if pairs is None else pairs.join(l, "l_id").join(r, "r_id")
     dot = F.aggregate(
         F.zip_with("emb_l", "emb_r", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-    scored = l.crossJoin(r).withColumn("dot", dot)
-    # ties -> smallest r_id, matching np.argmax's first-index rule
-    sub = (
-        scored.groupBy("l_id")
+    return (
+        scored.withColumn("dot", dot)
+        .groupBy("l_id")
         .agg(F.max_by(F.struct("r_id"), F.struct("dot", (-F.col("r_id")).alias("nr"))).alias("b"))
         .select(
             F.col("l_id").alias("ent_id"),
@@ -104,6 +104,16 @@ def brute_force_argmax(
             F.lit(False).alias("is_lit"),
         )
     )
+
+
+def brute_force_argmax(
+    emb_l: DataFrame, emb_r: DataFrame, prob: float = 0.2
+) -> tuple[DataFrame, DataFrame]:
+    """Exact J7 reset path (objects/KGs.py:265-279): row argmax of the
+    similarity matrix, assign ``prob`` both directions.
+
+    Test-scale only — the LSH path below is the 10^12-row strategy."""
+    sub = _dot_argmax(emb_l, emb_r, prob)
     return sub, _claims_sup(sub, prob)
 
 
@@ -214,38 +224,7 @@ def lsh_argmax(
     pairs = lsh_candidate_pairs(
         emb_l, emb_r, dim, n_bits, n_bands, seed, max_bucket_size=max_bucket_size
     )
-    l = emb_l.select(F.col("ent_id").alias("l_id"), F.col("embedding").alias("emb_l"))
-    r = emb_r.select(F.col("ent_id").alias("r_id"), F.col("embedding").alias("emb_r"))
-    dot = F.aggregate(
-        F.zip_with("emb_l", "emb_r", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    scored = pairs.join(l, "l_id").join(r, "r_id").withColumn("cos", dot)
-    return (
-        scored.groupBy("l_id")
-        .agg(F.max_by(F.struct("r_id"), F.struct("cos", (-F.col("r_id")).alias("nr"))).alias("b"))
-        .select(
-            F.col("l_id").alias("ent_id"),
-            F.col("b.r_id").alias("counterpart_id"),
-            F.lit(prob).alias("prob"),
-            F.lit(False).alias("is_lit"),
-        )
-    )
-
-
-def lsh_argmax_pair(
-    emb_l: DataFrame,
-    emb_r: DataFrame,
-    dim: int,
-    prob: float = 0.2,
-    n_bits: int = 128,
-    n_bands: int = 8,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """LSH-blocked J7 reset returning BOTH directions with the reference's
-    sup derivation (_claims_sup, the same rule as brute_force_argmax)."""
-    sub = lsh_argmax(emb_l, emb_r, dim, prob, n_bits, n_bands, seed, max_bucket_size=max_bucket_size)
-    return sub, _claims_sup(sub, prob)
+    return _dot_argmax(emb_l, emb_r, prob, pairs)
 
 
 # Above this many candidate pairs the exact cross join is never the right

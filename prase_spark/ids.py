@@ -36,12 +36,10 @@ def assign_dense_ids(
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_part = max(1, n_part)
 
-    # Pin the input: with n_part > 1 the RangePartitioner runs a separate
-    # sampling job over `df` before the range shuffle, so an unpinned input
-    # (typically a distinct() over the full corpus) is computed twice —
-    # once for boundary sampling, once for the shuffle itself.
-    if n_part > 1:
-        df = df.persist()
+    # The input is not pinned: under AQE the distinct() that precedes
+    # every call is a shuffle stage materialized before the range exchange
+    # samples it, so boundary sampling and the range shuffle both read
+    # its shuffle output rather than recomputing the corpus.
     parted = (
         df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -81,6 +79,4 @@ def assign_dense_ids(
     # relations), so downstream cache hygiene can't resurrect the race.
     out = out.localCheckpoint()
     parted.unpersist()
-    if n_part > 1:
-        df.unpersist()
     return out

@@ -212,12 +212,10 @@ def entity_candidates(
     if not init and embeddings_l is not None and embeddings_r is not None:
         # fusion: val = w1·score + w2·cos(emb_e, emb_t2) (test.py:74-76),
         # cosine computed natively (zip_with + aggregate — JVM, no Python).
+        from prase_spark.embed import cosine_expr
+
         emb_l = embeddings_l.select(F.col("ent_id").alias("e"), F.col("embedding").alias("emb_e"))
         emb_r = embeddings_r.select(F.col("ent_id").alias("t2"), F.col("embedding").alias("emb_t"))
-        dot = F.aggregate(
-            F.zip_with("emb_e", "emb_t", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-        nrm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))  # noqa: E731
         scored = (
             scored.join(emb_l, "e", "left")
             .join(emb_r, "t2", "left")
@@ -228,8 +226,7 @@ def entity_candidates(
                     fusion(F.col("score"), F.col("emb_e"), F.col("emb_t"))
                     if fusion is not None
                     else F.lit(cfg.fusion_paris_weight) * F.col("score")
-                    + F.lit(cfg.fusion_cosine_weight)
-                    * dot / (nrm(F.col("emb_e")) * nrm(F.col("emb_t"))),
+                    + F.lit(cfg.fusion_cosine_weight) * cosine_expr("emb_e", "emb_t"),
                 ).otherwise(F.col("score")),
             )
         )

@@ -313,8 +313,7 @@ def build_kgs_from_raw(
     independent, and build_kg is eager in its expensive parts (dense-id
     localCheckpoints, node/predicate persists), so they run as concurrent
     driver-thread jobs — one build's coordination gaps execute the
-    other's tasks (concurrency.materialize_concurrently; same
-    PRASE_SERIAL_CHECKPOINTS fallback)."""
+    other's tasks (concurrency.materialize_concurrently)."""
     kg_l, kg_r = materialize_concurrently(
         lambda: build_kg(raw_l), lambda: build_kg(raw_r)
     )

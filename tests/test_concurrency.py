@@ -1,8 +1,7 @@
-"""materialize_concurrently: ordering, serial fallback, error paths, and
-the caller's job group on the jobs its threads submit. The concurrent
-path copies the caller's Spark local properties, so it takes a session."""
+"""materialize_concurrently: ordering, overlap, error paths, and the
+caller's job group on the jobs its threads submit. It copies the caller's
+Spark local properties, so it takes a session."""
 
-import os
 import threading
 import time
 
@@ -32,25 +31,11 @@ def test_thunks_actually_overlap(spark):
     assert materialize_concurrently(first, second) == (1, 2)
 
 
-def test_serial_fallback_env(monkeypatch):
+def test_thunks_overlap_with_the_retired_serial_knob_set(spark, monkeypatch):
+    # this knob used to run the thunks one after another; it is gone, and
+    # the concurrent path is the only path
     monkeypatch.setenv("PRASE_SERIAL_CHECKPOINTS", "1")
-    order = []
-
-    def make(i):
-        def t():
-            order.append(i)
-            return i
-
-        return t
-
-    assert materialize_concurrently(make(0), make(1), make(2)) == (0, 1, 2)
-    assert order == [0, 1, 2]  # strictly sequential
-
-
-def test_single_thunk_runs_inline():
-    ident = threading.get_ident()
-    (got,) = materialize_concurrently(lambda: threading.get_ident())
-    assert got == ident  # no thread pool for a single thunk
+    test_thunks_actually_overlap(spark)
 
 
 def test_exception_propagates(spark):
@@ -61,8 +46,7 @@ def test_exception_propagates(spark):
         materialize_concurrently(lambda: time.sleep(0.01) or 1, boom)
 
 
-def test_jobs_keep_the_callers_job_group(spark, monkeypatch):
-    monkeypatch.delenv("PRASE_SERIAL_CHECKPOINTS", raising=False)
+def test_jobs_keep_the_callers_job_group(spark):
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "concurrency_group")
     try:

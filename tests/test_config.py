@@ -1,15 +1,11 @@
-"""Config: explicit env flag values, and a session that runs no job."""
+"""Config: get_spark builds or returns a session and runs no job."""
 
 import os
 import subprocess
 import sys
 import textwrap
-import threading
 
-import pytest
-
-from prase_spark.concurrency import materialize_concurrently
-from prase_spark.config import env_flag, get_spark
+from prase_spark.config import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -25,55 +21,8 @@ def _jobs_of_get_spark(spark, group):
     return sc.statusTracker().getJobIdsForGroup(group)
 
 
-# PRASE_NO_SESSION_WARMUP used to skip get_spark's warmup jobs. The knob is
-# retired with the warmups: env_flag still parses its values as before, and
-# get_spark submits no job whatever it is set to.
-@pytest.mark.parametrize(
-    "raw, skip",
-    [
-        (None, False), ("", False), ("0", False), ("false", False), ("False", False),
-        ("no", False), ("off", False), ("1", True), ("true", True), ("YES", True), ("on", True),
-    ],
-)
-def test_session_warmup_flag_parsed_by_value(spark, monkeypatch, raw, skip):
-    if raw is None:
-        monkeypatch.delenv("PRASE_NO_SESSION_WARMUP", raising=False)
-    else:
-        monkeypatch.setenv("PRASE_NO_SESSION_WARMUP", raw)
-    assert env_flag("PRASE_NO_SESSION_WARMUP") is skip
-    assert _jobs_of_get_spark(spark, f"retired_warmup_knob_{raw}") == []
-
-
-def test_session_warmup_flag_rejects_unknown_values(spark, monkeypatch):
-    monkeypatch.setenv("PRASE_NO_SESSION_WARMUP", "maybe")
-    with pytest.raises(ValueError, match="PRASE_NO_SESSION_WARMUP"):
-        env_flag("PRASE_NO_SESSION_WARMUP")
-    # get_spark no longer reads the knob, so an unknown value cannot fail it
-    assert _jobs_of_get_spark(spark, "retired_warmup_knob_maybe") == []
-
-
-@pytest.mark.parametrize(
-    "raw, serial",
-    [
-        (None, False), ("", False), ("0", False), ("false", False), ("False", False),
-        ("no", False), ("off", False), ("1", True), ("true", True), ("Yes", True),
-        ("YES", True), ("on", True),
-    ],
-)
-def test_serial_checkpoints_flag_parsed_by_value(spark, monkeypatch, raw, serial):
-    if raw is None:
-        monkeypatch.delenv("PRASE_SERIAL_CHECKPOINTS", raising=False)
-    else:
-        monkeypatch.setenv("PRASE_SERIAL_CHECKPOINTS", raw)
-    ran_on = set()
-    materialize_concurrently(*[lambda: ran_on.add(threading.get_ident())] * 2)
-    assert (ran_on == {threading.get_ident()}) is serial
-
-
-def test_serial_checkpoints_flag_rejects_unknown_values(monkeypatch):
-    monkeypatch.setenv("PRASE_SERIAL_CHECKPOINTS", "maybe")
-    with pytest.raises(ValueError, match="PRASE_SERIAL_CHECKPOINTS"):
-        materialize_concurrently(lambda: 1, lambda: 2)
+def test_get_spark_on_running_session_runs_no_job(spark):
+    assert _jobs_of_get_spark(spark, "get_spark_running_session") == []
 
 
 def test_get_spark_runs_no_job():

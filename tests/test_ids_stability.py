@@ -2,14 +2,29 @@
 unchanged (regression for the range-resample race; ids are pinned via
 eager localCheckpoint in ids.assign_dense_ids)."""
 
+import pytest
+
 from prase_spark.ids import assign_dense_ids
 from prase_spark.kgbuild import build_kg
 from prase_spark.schemas import RAW_TRIPLES
 
 
-def test_ids_dense_and_stable_across_clear_cache(spark):
-    df = spark.createDataFrame([(f"k{i:05d}",) for i in range(5000)], "name STRING")
-    out = assign_dense_ids(df, ["name"], id_col="id", num_partitions=8)
+def _names(spark):
+    return spark.createDataFrame([(f"k{i:05d}",) for i in range(5000)], "name STRING")
+
+
+def _unpinned_distinct(spark):
+    # the shape build_kg feeds in: an unpinned distinct() over a union that
+    # repeats every name, so the range exchange samples a shuffle output
+    names = _names(spark)
+    return names.unionByName(names).distinct()
+
+
+@pytest.mark.parametrize(
+    "make_input", [_names, _unpinned_distinct], ids=["names", "unpinned_distinct"]
+)
+def test_ids_dense_and_stable_across_clear_cache(spark, make_input):
+    out = assign_dense_ids(make_input(spark), ["name"], id_col="id", num_partitions=8)
     first = {r["name"]: r["id"] for r in out.collect()}
     assert sorted(first.values()) == list(range(5000))
     assert first["k00000"] == 0 and first["k04999"] == 4999

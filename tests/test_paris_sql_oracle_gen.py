@@ -20,7 +20,7 @@ def test_generated_sql_matches_engine(spark, iterations):
     from prase_spark.pipeline import align, alignment_results
     from prase_spark.tpch_kg import TABLES
 
-    kg1, kg2 = e._kg(spark, SF, 1), e._kg(spark, SF, 2)
+    kg1, kg2 = e._kg_pair(spark, SF)
     cfg = ParisConfig(iterations=iterations)
     run = align(spark, kg1, kg2, cfg, checkpoint=False)
     res = alignment_results(run.state, kg1, kg2, cfg.theta).select(

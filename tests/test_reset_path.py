@@ -155,20 +155,22 @@ def test_reset_dispatcher_pins_once(spark, monkeypatch, lsh):
     side and one pin per frame (sup is derived from the pinned sub)."""
     from prase_spark.datapipe.buckets import DEFAULT_MAX_BUCKET
     from prase_spark.embed import (
+        _claims_sup,
         auto_band_bits,
         brute_force_argmax,
         embedding_reset_matches,
-        lsh_argmax_pair,
+        lsh_argmax,
     )
 
     emb_l, emb_r = (e.localCheckpoint() for e in _kgs_with_embeddings(spark, 40)[2:])
     if lsh:
         n, dim = max(emb_l.count(), emb_r.count()), len(emb_l.first()["embedding"])
         bits = auto_band_bits(n)
-        want_sub, want_sup = lsh_argmax_pair(
+        want_sub = lsh_argmax(
             emb_l, emb_r, dim, 0.2, n_bits=bits * 48, n_bands=48,
             max_bucket_size=DEFAULT_MAX_BUCKET,
         )
+        want_sup = _claims_sup(want_sub, 0.2)
     else:
         want_sub, want_sup = brute_force_argmax(emb_l, emb_r, 0.2)
     want = _rows(want_sub), _rows(want_sup)

@@ -98,7 +98,8 @@ def test_canonical_entity_ids(spark):
 def test_connected_components_long_chain_auto_fallback(spark):
     """VERDICT r3 #4: a 100-hop chain (crawl-scale redirect/template
     chains) must DEGRADE to the O(log n) large-star/small-star alternation
-    under method='auto', not die — and produce exact min labels."""
+    once hash-min runs out of iterations, not die — and produce exact min
+    labels."""
     from pyspark.sql import functions as F
 
     from prase_spark.matching import connected_components

@@ -19,13 +19,14 @@ def main():
     spark = get_spark("explain", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from prase_spark.kgbuild import build_kg
     from prase_spark.paris import init_state
+    from prase_spark.pipeline import build_kgs_from_raw
     from prase_spark.seed import literal_seed_matches
     from prase_spark.tpch_kg import tpch_raw_triples
 
-    kg1 = build_kg(tpch_raw_triples(spark, sf, 1))
-    kg2 = build_kg(tpch_raw_triples(spark, sf, 2))
+    kg1, kg2 = build_kgs_from_raw(
+        spark, tpch_raw_triples(spark, sf, 1), tpch_raw_triples(spark, sf, 2)
+    )
     sub, sup = literal_seed_matches(kg1, kg2)
     state = init_state(spark, sub, sup)
 
