@@ -78,12 +78,24 @@ def _q_kg1_dict_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_kg1_inv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U5: name-level triples after INV doubling."""
-    from prase_spark.kgbuild import with_inverse
-    from prase_spark.tpch_kg import tpch_raw_triples
+    """U5: KG1's INV-doubled id triples, as built, joined back to their
+    node and predicate names."""
+    kg = _kg_pair(spark, sf_dir)[0]
 
-    return with_inverse(tpch_raw_triples(spark, sf_dir, 1)).select(
-        "subj", "pred", "obj", "is_inv"
+    def names(side: str) -> DataFrame:
+        return kg.nodes.select(F.col("ent_id").alias(side), F.col("name").alias(f"{side}_name"))
+
+    preds = kg.predicates.select(F.col("pred_id").alias("pred"), "name", "is_inv")
+    return (
+        kg.triples.join(F.broadcast(preds), "pred")
+        .join(names("subj"), "subj")
+        .join(names("obj"), "obj")
+        .select(
+            F.col("subj_name").alias("subj"),
+            F.col("name").alias("pred"),
+            F.col("obj_name").alias("obj"),
+            "is_inv",
+        )
     )
 
 

@@ -86,8 +86,7 @@ def main():
         sc.setJobDescription("paris: literal seed matches")
         with timed("paris_seed"):
             sub, sup = literal_seed_matches(kg1, kg2)
-            state = init_state(spark, sub, sup)
-            state = state.local_checkpoint()
+            state = init_state(spark, sub.localCheckpoint(), sup.localCheckpoint())
         sc.setJobDescription("paris: iteration 1")
         with timed("paris_iter1"):
             state = run_iteration(kg1, kg2, state, cfg)

@@ -24,10 +24,9 @@ def assign_dense_ids(
     df: DataFrame,
     order_cols: list[str],
     id_col: str = "id",
-    start: int = 0,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add ``id_col`` = start, start+1, ... densely in ``order_cols`` order.
+    """Add ``id_col`` = 0, 1, ... densely in ``order_cols`` order.
 
     ``order_cols`` must be a unique key of ``df`` (guaranteed by the
     ``distinct()`` dict-encode step that precedes every call).
@@ -60,9 +59,7 @@ def assign_dense_ids(
     w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
         "__pid",
-        (F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)) + F.lit(start)).alias(
-            "__offset"
-        ),
+        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__offset"),
     )
 
     w = Window.partitionBy("__pid").orderBy(*order_cols)

@@ -5,7 +5,8 @@ test.py:10-55) as a handful of DataFrame jobs:
 
 - dedup dicts by name           -> ``distinct()``                (objects/KG.py:95-143)
 - dense id reassignment         -> distributed dense rank        (objects/KG.py:202-210)
-- inverse-edge doubling         -> ``unionByName`` of swapped    (objects/KG.py:145-157)
+- inverse-edge doubling         -> ``explode`` of each resolved  (objects/KG.py:145-157)
+                                   id triple and its swapped twin
 - adjacency dicts by head/tail  -> *dropped*: joins on subj/obj replace them
                                    (objects/KG.py:212-219)
 - functionality per predicate   -> groupBy agg                   (objects/Relation.py:45-49)
@@ -63,37 +64,8 @@ class KGFrames:
             df.unpersist()
 
 
-def with_inverse(raw: DataFrame) -> DataFrame:
-    """INV-doubling at the name level (objects/KG.py:145-157).
-
-    Input: (subj, pred, obj, is_attr). Output adds is_inv and, for attribute
-    triples, marks the literal endpoint: forward attr triples have a literal
-    object; their inverses have a literal subject.
-    """
-    fwd = raw.select(
-        F.trim("subj").alias("subj"),
-        F.trim("pred").alias("pred"),
-        F.trim("obj").alias("obj"),
-        "is_attr",
-        F.lit(False).alias("is_inv"),
-        F.lit(False).alias("subj_is_lit"),
-        F.col("is_attr").alias("obj_is_lit"),
-    )
-    inv = raw.select(
-        F.trim("obj").alias("subj"),
-        inv_pred_name(F.col("pred")).alias("pred"),
-        F.trim("subj").alias("obj"),
-        "is_attr",
-        F.lit(True).alias("is_inv"),
-        F.col("is_attr").alias("subj_is_lit"),
-        F.lit(False).alias("obj_is_lit"),
-    )
-    return fwd.unionByName(inv)
-
-
 def build_kg(
     raw_triples: DataFrame,
-    shuffle_partitions: int | None = None,
     ent_norm=None,
     pred_norm=None,
     lite_norm=None,
@@ -112,7 +84,6 @@ def build_kg(
     ent_norm = ent_norm or normalize_uri
     pred_norm = pred_norm or normalize_uri
     lite_norm = lite_norm or normalize_literal
-    spark = raw_triples.sparkSession
     # Resolve FORWARD triples only and derive INV rows by swapping the
     # already-resolved ids (the INV name set is identical to the forward
     # one, so doubling the strings before dict-encode/resolution would
@@ -154,10 +125,7 @@ def build_kg(
     # and each is a serial chain of eager jobs (range-sort, offset
     # collect, localCheckpoint) — overlap them (concurrency module).
     nodes, predicates = materialize_concurrently(
-        lambda: assign_dense_ids(
-            node_names, ["is_literal", "name"], id_col="ent_id",
-            num_partitions=shuffle_partitions,
-        ),
+        lambda: assign_dense_ids(node_names, ["is_literal", "name"], id_col="ent_id"),
         # The predicate dict is schema-sized (the engine broadcasts it
         # everywhere, like the reference ships its dicts to every worker):
         # a 1-partition range sort skips the RangePartitioner sampling job
@@ -240,7 +208,7 @@ def build_kg(
             )
         ).alias("t")
     ).select("t.*")
-    n_part = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(raw_triples.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # One hash partitioning by subj, reused by every PARIS head-side probe.
     # Pinned with localCheckpoint, not persist: (a) it materializes NOW,
     # while `named` is still cached, so the resolution joins never re-derive

@@ -1,7 +1,8 @@
 """Mutual-best bipartite matching + connected-components canonicalization.
 
 - bipartite_match: reference __ent_bipartite_matching (objects/KGs.py:222-241)
-  re-expressed as one groupBy-argmax + one join-filter (no loops).
+  re-expressed as two passes, claim_pass (one groupBy-argmax + one
+  full-outer join) and reciprocity_pass (one join-filter), no loops.
 - connected_components: NEW capability (SURVEY.md §4) — the reference only
   ever aligns two KGs 1:1; web-scale mention canonicalization needs
   transitive closure over the match graph.
@@ -13,16 +14,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def bipartite_match(
-    matches_sub: DataFrame, matches_sup: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Enforce mutual-best 1:1 alignment (objects/KGs.py:222-241).
-
-    Pass 1: each right entity adopts the best left claimant if that beats its
-    current prob (strict >, existing wins ties — ``counterpart_prob < prob``
-    at :229). Pass 2: left matches not reciprocated by the updated right
-    state are dropped (:232-241). Only entity rows participate; literal seed
-    rows pass through untouched (the reference iterates ``entity_set``).
+def claim_pass(matches_sub: DataFrame, matches_sup: DataFrame) -> DataFrame:
+    """Bipartite pass 1 (objects/KGs.py:222-231): each right entity adopts
+    its best left claimant if that beats its current prob (strict >,
+    existing wins ties — ``counterpart_prob < prob`` at :229). Returns the
+    new sup state. Only entity sub rows claim; literal seed rows pass
+    through untouched (the reference iterates ``entity_set``).
 
     Documented deviation: when two NEW claimants tie on prob exactly, we
     keep the larger ent_id (max_by struct order) whereas the reference's
@@ -31,9 +28,9 @@ def bipartite_match(
     1; the P/R≥0.95 parity band absorbs them, and the SQL oracle mirrors
     THIS rule so the value gate is internally exact.
     """
-    sub_ent = matches_sub.filter(~F.col("is_lit"))
     claims = (
-        sub_ent.groupBy("counterpart_id")
+        matches_sub.filter(~F.col("is_lit"))
+        .groupBy("counterpart_id")
         .agg(F.max_by(F.struct("ent_id", "prob"), F.struct("prob", "ent_id")).alias("c"))
         .select(
             F.col("counterpart_id").alias("ent_id"),
@@ -47,7 +44,7 @@ def bipartite_match(
     take_new = F.col("new_prob").isNotNull() & (
         F.col("new_prob") > F.coalesce(F.col("s.prob"), F.lit(0.0))
     )
-    new_sup = sup.select(
+    return sup.select(
         "ent_id",
         F.when(take_new, F.col("new_cp")).otherwise(F.col("s.counterpart_id")).alias(
             "counterpart_id"
@@ -55,23 +52,39 @@ def bipartite_match(
         F.when(take_new, F.col("new_prob")).otherwise(F.col("s.prob")).alias("prob"),
         F.coalesce(F.col("s.is_lit"), F.lit(False)).alias("is_lit"),
     ).filter(F.col("counterpart_id").isNotNull())
-    # Pass 2 reads the *updated* sup state (reference mutates in place).
-    # Literal sup rows participate in the reciprocity lookup too: the
-    # reference indexes sup_ent_match[sub_counterpart_id] regardless of
-    # literal-ness (objects/KGs.py:236-241), so an entity force-merged onto
-    # a literal counterpart is cleared unless the literal points back.
+
+
+def reciprocity_pass(matches_sub: DataFrame, new_sup: DataFrame) -> DataFrame:
+    """Bipartite pass 2 (objects/KGs.py:232-241): left entity matches not
+    reciprocated by the *updated* sup state (claim_pass's output; the
+    reference mutates in place) are dropped. Returns the new sub state.
+
+    Literal sup rows participate in the reciprocity lookup too: the
+    reference indexes sup_ent_match[sub_counterpart_id] regardless of
+    literal-ness (objects/KGs.py:236-241), so an entity force-merged onto
+    a literal counterpart is cleared unless the literal points back."""
     sup_ent = new_sup.select(
         F.col("ent_id").alias("counterpart_id"),
         F.col("counterpart_id").alias("reciprocal"),
     )
     kept = (
-        sub_ent.join(sup_ent, "counterpart_id", "left")
+        matches_sub.filter(~F.col("is_lit"))
+        .join(sup_ent, "counterpart_id", "left")
         .filter(F.col("reciprocal").isNull() | (F.col("reciprocal") == F.col("ent_id")))
-        .drop("reciprocal")
         .select("ent_id", "counterpart_id", "prob", "is_lit")
     )
-    new_sub = kept.unionByName(matches_sub.filter(F.col("is_lit")))
-    return new_sub, new_sup
+    return kept.unionByName(matches_sub.filter(F.col("is_lit")))
+
+
+def bipartite_match(
+    matches_sub: DataFrame, matches_sup: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Enforce mutual-best 1:1 alignment (objects/KGs.py:222-241): the
+    claim pass, then the reciprocity pass against its output. Returns
+    lazy (new_sub, new_sup); run_iteration runs the two passes itself so
+    it can pin new_sup between them."""
+    new_sup = claim_pass(matches_sub, matches_sup)
+    return reciprocity_pass(matches_sub, new_sup), new_sup
 
 
 def _star_round(edges: DataFrame) -> DataFrame:

@@ -1,9 +1,18 @@
-"""One PARIS half-iteration as a single declarative DataFrame DAG.
+"""The PARIS iteration as a straight line of declarative DataFrame passes.
 
-Reference kernel: model/PARIS.py:81-125 (``one_iteration_one_way``) — a
-per-entity Python loop over adjacency dicts with multiprocessing fan-out.
-Here the same math is two shuffle joins + two broadcast joins + two hash
-aggregations, so Catalyst/Tungsten run it whole-stage-codegen'd:
+One iteration (``run_iteration``, objects/KGs.py:104-108) runs four
+single-purpose passes, and each pins its output exactly once:
+
+    entity_pass       L→R   → rel_align_l, entity candidates (overlapped)
+    max_merge + matching.claim_pass       → matches_sup
+    relation_pass     R→L   → rel_align_r   (overlapped; both read
+    matching.reciprocity_pass → matches_sub  the pinned matches_sup)
+
+Reference kernel of the entity pass: model/PARIS.py:81-125
+(``one_iteration_one_way``) — a per-entity Python loop over adjacency
+dicts with multiprocessing fan-out. Here the same math is two shuffle
+joins + two broadcast joins + two hash aggregations, so
+Catalyst/Tungsten run it whole-stage-codegen'd:
 
     facts_l(h,r,e) ⋈ matches(h→h',p_h)[θ-filtered]          (J2a, shuffle)
       ⟕ matches(e→e',p_e)                                    (J5, shuffle)
@@ -58,20 +67,6 @@ class AlignState:
     iter_num: int = 0
     has_load: bool = False
 
-    def local_checkpoint(self) -> "AlignState":
-        """Truncate lineage in place (mandatory between iterations —
-        iterative self-joins otherwise grow the plan exponentially,
-        SURVEY.md §7.4). Parquet round-trip via checkpoint.py is the
-        durable/resumable variant."""
-        return AlignState(
-            matches_sub=self.matches_sub.localCheckpoint(),
-            matches_sup=self.matches_sup.localCheckpoint(),
-            rel_align_l=self.rel_align_l.localCheckpoint(),
-            rel_align_r=self.rel_align_r.localCheckpoint(),
-            iter_num=self.iter_num,
-            has_load=self.has_load,
-        )
-
 
 def _empty_rel_align(spark) -> DataFrame:
     return spark.createDataFrame(
@@ -98,8 +93,8 @@ def rel_align_update(
 
     Scale note: the numerator condition ``t' == match(e)`` is an
     equi-condition, so it joins facts_r on BOTH (h', t') keys — it never
-    materializes the hub-head expansion the candidate path needs. The R→L
-    pass (ent_align=False) therefore costs two narrow joins total."""
+    materializes the hub-head expansion the candidate path needs, so
+    relation_pass costs two narrow joins total."""
     numer = (
         cand_base.filter(F.col("e_cp").isNotNull() & (F.col("p_e") > 0.0))
         .join(
@@ -308,7 +303,7 @@ def evidence_expansion(
     return _expand(kg_l, kg_r, *_expansion_inputs(kg_l, kg_r, matches_sub, theta))
 
 
-def half_iteration(
+def entity_pass(
     kg_l: KGFrames,
     kg_r: KGFrames,
     matches_sub: DataFrame,
@@ -316,42 +311,45 @@ def half_iteration(
     rel_align_r: DataFrame,
     cfg: ParisConfig,
     init: bool,
-    ent_align: bool = True,
     embeddings_l: DataFrame | None = None,
     embeddings_r: DataFrame | None = None,
     fusion=None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """One directional pass: returns (new rel_align for this side,
-    entity-candidate updates or None). Mirrors __run_per_iteration_one_way
-    (objects/KGs.py:110-174) with Jacobi state reads."""
+) -> tuple[DataFrame, DataFrame]:
+    """The L→R pass (objects/KGs.py:110-174, Jacobi state reads): returns
+    the pinned (new rel_align_l, entity candidates)."""
     cand_base, facts_r = _expansion_inputs(kg_l, kg_r, matches_sub, cfg.theta)
-    # cand_base is consumed by norm, numerator, and (if ent_align) the
-    # expansion — pin it; it is O(matched facts), never hub-expanded.
+    # cand_base is read by the rel-align norm, its numerator and the
+    # expansion; it is O(matched facts), never hub-expanded.
     cand_base = cand_base.persist()
     rel_lazy = rel_align_update(cand_base, facts_r, cfg.const)
-    cands = None
-    if ent_align:
-        # The hub-head expansion has exactly ONE consumer (the candidate
-        # scorer); its δ-filter drops hub garbage before the product-agg
-        # shuffle, so the wide intermediate is streamed, never stored.
-        expanded = _expand(kg_l, kg_r, cand_base, facts_r)
-        cands_lazy = entity_candidates(
-            expanded, rel_align_l, rel_align_r, cfg, init,
-            embeddings_l, embeddings_r, fusion=fusion,
-        )
-        # Jacobi makes rel_new and cands mutually independent (rel_new is
-        # only read NEXT iteration), so their materialization jobs overlap:
-        # at sandbox volume each job is dominated by stage-scheduling
-        # latency with idle cores (BENCH.md Amdahl note), and on a cluster
-        # the scheduler interleaves their stages across executors.
-        rel_new, cands = materialize_concurrently(
-            lambda: rel_lazy.localCheckpoint(),
-            lambda: cands_lazy.localCheckpoint(),
-        )
-    else:
-        rel_new = rel_lazy.localCheckpoint()
+    # The hub-head expansion has one consumer (the candidate scorer); its
+    # δ-filter drops hub garbage before the product-agg shuffle, so the
+    # wide intermediate is streamed, never stored.
+    cands_lazy = entity_candidates(
+        _expand(kg_l, kg_r, cand_base, facts_r), rel_align_l, rel_align_r,
+        cfg, init, embeddings_l, embeddings_r, fusion=fusion,
+    )
+    # Jacobi makes the two independent (rel-align is only read NEXT
+    # iteration), so their pin jobs overlap (materialize_concurrently).
+    rel_new, cands = materialize_concurrently(
+        lambda: rel_lazy.localCheckpoint(),
+        lambda: cands_lazy.localCheckpoint(),
+    )
     cand_base.unpersist()
     return rel_new, cands
+
+
+def relation_pass(
+    kg_l: KGFrames, kg_r: KGFrames, matches_sub: DataFrame, cfg: ParisConfig
+) -> DataFrame:
+    """The rel-align-only pass (objects/KGs.py:107, run R→L on the
+    post-bipartite sup state): returns the pinned new rel_align for
+    ``kg_l``'s side. No expansion: two narrow joins over cand_base."""
+    cand_base, facts_r = _expansion_inputs(kg_l, kg_r, matches_sub, cfg.theta)
+    cand_base = cand_base.persist()  # read by the norm and the numerator
+    rel_new = rel_align_update(cand_base, facts_r, cfg.const).localCheckpoint()
+    cand_base.unpersist()
+    return rel_new
 
 
 def run_iteration(
@@ -363,39 +361,28 @@ def run_iteration(
     embeddings_r: DataFrame | None = None,
     fusion=None,
 ) -> AlignState:
-    """One full PARIS iteration (objects/KGs.py:104-108):
-    L→R pass (ent+rel) → max-merge → bipartite → R→L pass (rel only)."""
-    from prase_spark.matching import bipartite_match
+    """One full PARIS iteration (objects/KGs.py:104-108): L→R entity pass
+    → max-merge → claim pass → R→L relation pass and reciprocity pass.
+    Every returned frame is pinned exactly once, so callers need no
+    checkpoint of their own between iterations."""
+    from prase_spark.matching import claim_pass, reciprocity_pass
 
     init = (not state.has_load) and state.iter_num <= 1
-    rel_l_new, cands = half_iteration(
+    rel_l_new, cands = entity_pass(
         kg_l, kg_r, state.matches_sub, state.rel_align_l, state.rel_align_r,
-        cfg, init, ent_align=True,
-        embeddings_l=embeddings_l, embeddings_r=embeddings_r, fusion=fusion,
+        cfg, init, embeddings_l, embeddings_r, fusion=fusion,
     )
     # merged_sub is read by both bipartite passes but is cheap (one join of
-    # two already-pinned match tables): a lazy persist lets new_sup's
-    # checkpoint job materialize it in passing — one blocking job wave per
-    # iteration fewer than checkpointing it separately (at 100-TB volume
-    # that is one full pass over the match state saved per iteration).
+    # two pinned match tables): a lazy persist lets new_sup's pin job
+    # materialize it in passing, one blocking job fewer than pinning it.
     merged_sub = max_merge(state.matches_sub, cands).persist()
-    new_sub, new_sup = bipartite_match(merged_sub, state.matches_sup)
-    # new_sub's pass-2 filter reads new_sup; pin new_sup so the R-side rel
-    # pass and the sub filter don't recompute the claim aggregation.
-    new_sup = new_sup.localCheckpoint()
-    # R-side rel stats read the post-bipartite sup state, ent_align=False
-    # (objects/KGs.py:107). Both consumers below depend only on the pinned
-    # new_sup, so the R-side pass and the final sub pin are independent
-    # jobs — overlap them (see materialize_concurrently).
+    new_sup = claim_pass(merged_sub, state.matches_sup).localCheckpoint()
+    # The R→L rel pass and the reciprocity pass both read only the pinned
+    # new_sup, so neither runs the claim aggregation again, and their pin
+    # jobs overlap.
     rel_r_new, new_sub = materialize_concurrently(
-        lambda: half_iteration(
-            kg_r, kg_l, new_sup, state.rel_align_r, state.rel_align_l,
-            cfg, init, ent_align=False,
-        )[0],
-        # pin the last lazy output too: every returned frame is
-        # materialized exactly once, so callers need no second
-        # checkpoint wave
-        lambda: new_sub.localCheckpoint(),
+        lambda: relation_pass(kg_r, kg_l, new_sup, cfg),
+        lambda: reciprocity_pass(merged_sub, new_sup).localCheckpoint(),
     )
     merged_sub.unpersist()
     return AlignState(

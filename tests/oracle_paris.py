@@ -15,7 +15,7 @@ def clamp01(x: float) -> float:
     return 0.0 if x < 0.0 else (1.0 if x > 1.0 else x)
 
 
-def half_iteration_oracle(
+def one_way_oracle(
     facts_l: list[tuple[int, int, int, bool, bool]],
     facts_r: list[tuple[int, int, int, bool, bool]],
     func_l: dict[int, float],
@@ -86,6 +86,18 @@ def half_iteration_oracle(
         v, c = max(vals)  # deterministic (val, cand) tie-break
         best[e] = (c, v)
     return rel_new, best
+
+
+def relation_pass_oracle(
+    facts_l, facts_r, func_l, func_r, matches_sub, theta, epsilon, delta, const
+):
+    """The rel-align-only pass (objects/KGs.py:107): one_way_oracle's
+    rel-align output with entity alignment switched off."""
+    rel_new, _ = one_way_oracle(
+        facts_l, facts_r, func_l, func_r, matches_sub, {}, {},
+        theta, epsilon, delta, const, init=True, ent_align=False,
+    )
+    return rel_new
 
 
 def max_merge_oracle(prev: dict, update: dict) -> dict:

@@ -44,7 +44,7 @@ def test_alignment_quality_and_resume(spark, fx, tmp_path_factory):
 
     st = resumed_state
     while st.iter_num < cfg.iterations:
-        st = run_iteration(fx["kg_l"], fx["kg_r"], st, cfg).local_checkpoint()
+        st = run_iteration(fx["kg_l"], fx["kg_r"], st, cfg)
     orig = {
         (r["ent_id"]): (r["counterpart_id"], round(r["prob"], 9))
         for r in run.state.matches_sub.collect()

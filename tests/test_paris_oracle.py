@@ -3,18 +3,17 @@ pure-Python Jacobi oracle (tests/oracle_paris.py) on the synthetic two-KG
 fixture — FIXTURES.md §4 item 2."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from prase_spark.config import ParisConfig
 from prase_spark.fixtures import two_kg_fixture
 from prase_spark.kgbuild import build_kg
-from prase_spark.matching import bipartite_match
-from prase_spark.paris import half_iteration, init_state, run_iteration
-from prase_spark.seed import literal_seed_matches, max_merge
+from prase_spark.paris import entity_pass, init_state, relation_pass, run_iteration
+from prase_spark.seed import literal_seed_matches
 from tests.oracle_paris import (
     bipartite_oracle,
-    half_iteration_oracle,
     max_merge_oracle,
+    one_way_oracle,
+    relation_pass_oracle,
 )
 
 CFG = ParisConfig()
@@ -34,6 +33,14 @@ def setup(spark):
         "kg_l": kg_l, "kg_r": kg_r, "sub": sub, "sup": sup,
         "facts_l": facts_l, "facts_r": facts_r, "func_l": func_l, "func_r": func_r,
     }
+
+
+@pytest.fixture(scope="module")
+def iter1(spark, setup):
+    """The state after one run_iteration from the literal seeds."""
+    return run_iteration(
+        setup["kg_l"], setup["kg_r"], init_state(spark, setup["sub"], setup["sup"]), CFG
+    )
 
 
 def df_matches_to_dict(df):
@@ -70,15 +77,15 @@ def assert_close_dicts(got, want, tol=1e-9, cp_agreement=1.0):
         )
 
 
-def test_first_half_iteration_matches_oracle(spark, setup):
+def test_entity_pass_matches_oracle(spark, setup):
     st = setup
-    rel_new, cands = half_iteration(
+    rel_new, cands = entity_pass(
         st["kg_l"], st["kg_r"], st["sub"],
         spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob DOUBLE"),
         spark.createDataFrame([], "pred_id LONG, counterpart_pred_id LONG, prob DOUBLE"),
-        CFG, init=True, ent_align=True,
+        CFG, init=True,
     )
-    o_rel, o_best = half_iteration_oracle(
+    o_rel, o_best = one_way_oracle(
         st["facts_l"], st["facts_r"], st["func_l"], st["func_r"],
         df_matches_to_dict(st["sub"]), {}, {},
         CFG.theta, CFG.epsilon, CFG.delta, CFG.const, init=True,
@@ -90,15 +97,27 @@ def test_first_half_iteration_matches_oracle(spark, setup):
     assert_close_dicts(got_best, o_best, cp_agreement=0.97)
 
 
-def test_full_iteration_matches_oracle(spark, setup):
+def test_relation_pass_matches_oracle(setup, iter1):
+    """The rel-align-only pass, run L→R on iteration 1's sub state (the
+    seed state has no entity matches, so its rel-align is empty)."""
     st = setup
-    state = init_state(spark, st["sub"], st["sup"])
-    new_state = run_iteration(st["kg_l"], st["kg_r"], state, CFG)
+    rel_new = relation_pass(st["kg_l"], st["kg_r"], iter1.matches_sub, CFG)
+    o_rel = relation_pass_oracle(
+        st["facts_l"], st["facts_r"], st["func_l"], st["func_r"],
+        df_matches_to_dict(iter1.matches_sub), CFG.theta, CFG.epsilon, CFG.delta, CFG.const,
+    )
+    assert o_rel
+    assert_close_dicts(df_rel_to_dict(rel_new), o_rel)
+
+
+def test_full_iteration_matches_oracle(setup, iter1):
+    st = setup
+    new_state = iter1
 
     # oracle replay of run_iteration
     sub0 = df_matches_to_dict(st["sub"])
     sup0 = df_matches_to_dict(st["sup"])
-    o_rel_l, o_best = half_iteration_oracle(
+    o_rel_l, o_best = one_way_oracle(
         st["facts_l"], st["facts_r"], st["func_l"], st["func_r"], sub0, {}, {},
         CFG.theta, CFG.epsilon, CFG.delta, CFG.const, init=True,
     )
@@ -106,9 +125,9 @@ def test_full_iteration_matches_oracle(spark, setup):
     lit_l = set(sub0)  # all seed rows are literals
     lit_r = set(sup0)
     o_sub, o_sup = bipartite_oracle(merged, sup0, lit_l, lit_r)
-    o_rel_r, _ = half_iteration_oracle(
-        st["facts_r"], st["facts_l"], st["func_r"], st["func_l"], o_sup, {}, {},
-        CFG.theta, CFG.epsilon, CFG.delta, CFG.const, init=True, ent_align=False,
+    o_rel_r = relation_pass_oracle(
+        st["facts_r"], st["facts_l"], st["func_r"], st["func_l"], o_sup,
+        CFG.theta, CFG.epsilon, CFG.delta, CFG.const,
     )
     assert_close_dicts(df_rel_to_dict(new_state.rel_align_l), o_rel_l)
     assert_close_dicts(df_rel_to_dict(new_state.rel_align_r), o_rel_r)
@@ -116,19 +135,17 @@ def test_full_iteration_matches_oracle(spark, setup):
     assert_close_dicts(df_matches_to_dict(new_state.matches_sup), o_sup, cp_agreement=0.97)
 
 
-def test_second_iteration_matches_oracle(spark, setup):
+def test_second_iteration_matches_oracle(setup, iter1):
     """Non-init path: θ-filter against real rel-align probs."""
     st = setup
-    state = init_state(spark, st["sub"], st["sup"])
-    s1 = run_iteration(st["kg_l"], st["kg_r"], state, CFG).local_checkpoint()
     # iteration 2 still has init=True in the reference (iter_num <= 1,
     # objects/KGs.py:136); iterate once more to reach the non-init branch.
-    s2 = run_iteration(st["kg_l"], st["kg_r"], s1, CFG).local_checkpoint()
-    s3_rel, s3_cands = half_iteration(
+    s2 = run_iteration(st["kg_l"], st["kg_r"], iter1, CFG)
+    s3_rel, s3_cands = entity_pass(
         st["kg_l"], st["kg_r"], s2.matches_sub, s2.rel_align_l, s2.rel_align_r,
-        CFG, init=False, ent_align=True,
+        CFG, init=False,
     )
-    o_rel, o_best = half_iteration_oracle(
+    o_rel, o_best = one_way_oracle(
         st["facts_l"], st["facts_r"], st["func_l"], st["func_r"],
         df_matches_to_dict(s2.matches_sub),
         df_rel_to_dict(s2.rel_align_l), df_rel_to_dict(s2.rel_align_r),

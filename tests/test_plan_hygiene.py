@@ -32,6 +32,31 @@ def test_candidate_plan_hygiene(spark):
     assert "HashAggregate" in plan
 
 
+def test_iteration_runs_claim_aggregation_once(spark, monkeypatch):
+    """One run_iteration pins each state frame once, and only the pinned
+    new sup state runs the bipartite claim aggregation: the reciprocity
+    pass reads that pin instead of re-deriving the claims."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from prase_spark.paris import init_state, run_iteration
+
+    fx = two_kg_fixture(spark, n_ent=40, seed=42)
+    kg_l, kg_r = build_kg(fx["raw_l"]), build_kg(fx["raw_r"])
+    sub, sup = literal_seed_matches(kg_l, kg_r)
+    state = init_state(spark, sub, sup)
+    plans = []
+    pin = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(_plan(self))
+        return pin(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    run_iteration(kg_l, kg_r, state, ParisConfig())
+    assert len(plans) == 5  # rel_align_l, candidates, sup, rel_align_r, sub
+    assert sum("max_by(struct(ent_id" in p for p in plans) == 1
+
+
 def test_scan_pushdown(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     q = df.filter(F.col("o_orderkey") % 7 != 0).select("o_orderkey")

@@ -52,8 +52,8 @@ def test_pandas_fusion_hook(spark):
 
     sub0, sup0 = lsm(kg_l, kg_r)
     st = init_state(spark, sub0, sup0)
-    st = run_iteration(kg_l, kg_r, st, cfg).local_checkpoint()
-    st = run_iteration(kg_l, kg_r, st, cfg).local_checkpoint()
+    st = run_iteration(kg_l, kg_r, st, cfg)
+    st = run_iteration(kg_l, kg_r, st, cfg)
     expanded = evidence_expansion(kg_l, kg_r, st.matches_sub, cfg.theta)
 
     # custom fusion mirrors the reference default (0.8p + 0.2cos) in Python
