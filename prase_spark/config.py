@@ -19,9 +19,6 @@ class ParisConfig:
     epsilon: float = 1.01     # dampening            (objects/KGs.py:21)
     const: float = 10.0       # normalization const  (objects/KGs.py:22,212)
     iterations: int = 3       # fixpoint rounds      (objects/KGs.py:15)
-    # weights of the default fusion function (test.py:74-76)
-    fusion_paris_weight: float = 0.8
-    fusion_cosine_weight: float = 0.2
     # engine knobs (no reference analog; scale controls)
     checkpoint_dir: str = field(default="/tmp/prase_spark_ckpt")
 

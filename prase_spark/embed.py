@@ -238,14 +238,14 @@ def embedding_reset_matches(
     emb_r: DataFrame,
     prob: float = 0.2,
     use_lsh: bool | None = None,
-    pair_budget: int = _BRUTE_FORCE_PAIR_BUDGET,
 ) -> tuple[DataFrame, DataFrame]:
     """J7 dispatcher: exact cross-join argmax at test scale, LSH-blocked
-    argmax beyond ``pair_budget`` candidate pairs (or when forced via
-    ``use_lsh``). The cross join is THE cartesian scale-killer at web scale,
-    so production paths must never reach it implicitly — the size gate here
-    costs one aggregate per side on the (small-schema) embedding tables, the
-    left one also reading the embedding dimension.
+    argmax beyond ``_BRUTE_FORCE_PAIR_BUDGET`` candidate pairs (read at
+    call time) or when forced via ``use_lsh``. The cross join is THE
+    cartesian scale-killer at web scale, so production paths must never
+    reach it implicitly — the size gate here costs one aggregate per side
+    on the (small-schema) embedding tables, the left one also reading the
+    embedding dimension.
 
     Both returned frames are pinned (localCheckpoint): sub is computed
     once, sup is derived from the pinned sub, and callers — the PARIS
@@ -265,7 +265,7 @@ def embedding_reset_matches(
         n_l, dim = emb_l.agg(F.count(F.lit(1)), F.max(F.size("embedding"))).first()
         n_r = emb_r.count()
         if use_lsh is None:
-            use_lsh = n_l * n_r > pair_budget
+            use_lsh = n_l * n_r > _BRUTE_FORCE_PAIR_BUDGET
     if use_lsh and (dim or 0) > 0:
         from prase_spark.datapipe.buckets import DEFAULT_MAX_BUCKET
 

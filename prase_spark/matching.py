@@ -126,52 +126,24 @@ def _star_round(edges: DataFrame) -> DataFrame:
     return small
 
 
-def _star_components(
-    sym: DataFrame, nodes: DataFrame, max_rounds: int, stats_out: dict | None = None
-) -> DataFrame:
-    """Large-star/small-star alternation to a star fixpoint: O(log n)
-    rounds regardless of chain length (vs hash-min's O(diameter)). At the
-    fixpoint every edge is (node, component-min), so labels fall out of
-    the final edge list directly. Convergence is checked EXACTLY
-    (exceptAll both ways is overkill: rounds never invent nodes, and the
-    edge set at fixpoint is canonical, so same-count + empty one-sided
-    difference suffices)."""
-    edges = (
-        sym.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when every edge (a, b), a > b, hangs leaf a off center b:
+    each node that is some edge's ``a`` occurs in no other edge. Each
+    component is then one star whose center is its min node, so the
+    edges are the labels (the large-star/small-star fixpoint)."""
+    roles = edges.select(F.col("a").alias("n"), F.lit(1).alias("leaf")).unionByName(
+        edges.select(F.col("b").alias("n"), F.lit(0).alias("leaf"))
     )
-    rounds = 0
-    for _ in range(max_rounds):
-        new_edges = _star_round(edges).localCheckpoint()
-        rounds += 1
-        same = (
-            new_edges.count() == edges.count()
-            and new_edges.exceptAll(edges).limit(1).count() == 0
-        )
-        edges = new_edges
-        if same:
-            break
-    else:
-        raise RuntimeError(
-            f"star-contraction components did not converge within {max_rounds} "
-            "rounds — pathological id graph (expected O(log n) rounds)"
-        )
-    if stats_out is not None:
-        stats_out["star_rounds"] = rounds
-    return nodes.join(
-        edges.select(F.col("a").alias("node"), F.col("b").alias("component")),
-        "node",
-        "left",
-    ).select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
+    return (
+        roles.groupBy("n")
+        .agg(F.max("leaf").alias("leaf"), F.count(F.lit(1)).alias("deg"))
+        .filter((F.col("leaf") == 1) & (F.col("deg") > 1))
+        .isEmpty()
     )
 
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 25,
     src: str = "src",
     dst: str = "dst",
     stats_out: dict | None = None,
@@ -179,69 +151,48 @@ def connected_components(
     """Connected components over an undirected edge list.
 
     Returns (node, component) where component = min node id reachable.
-    Runs hash-min label propagation — cheapest constant factors for the
-    tiny-diameter clusters dedup/alignment produce — and, if it has not
-    converged after ``max_iter`` rounds (e.g. a crawl-scale
-    redirect/template chain longer than max_iter hops), FALLS BACK to the
-    large-star/small-star alternation, which converges in O(log n) rounds
-    independent of diameter. Iterative joins localCheckpoint every round
-    to truncate lineage (mandatory — SURVEY.md §4). ``stats_out`` (dict)
-    receives operator telemetry: ``method`` actually used (``hashmin`` or
-    ``hashmin->star``), ``hashmin_rounds`` / ``star_rounds`` executed —
-    the convergence-behavior numbers an operator watches at crawl scale.
+    Runs large-star/small-star rounds (``_star_round``) until the edges
+    form a star forest (``_is_star_forest``): O(log n) rounds whatever
+    the component diameter, so a crawl-scale redirect or template chain
+    costs a handful of rounds, and a 1:1 match graph is a star forest
+    from the start (zero rounds). Every round is pinned (localCheckpoint)
+    to cut lineage (mandatory for iterative joins — SURVEY.md §4).
+    ``stats_out`` (dict) receives ``star_rounds``, the number of rounds
+    run.
     """
-    star_rounds = 60  # O(log n) alternation: 60 covers any feasible n
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    # one (larger, smaller) row per edge; self-loops and null endpoints
+    # stay in this pin so every input node gets a label
+    swap = F.col(src) < F.col(dst)
+    pairs = (
+        edges.select(
+            F.when(swap, F.col(dst)).otherwise(F.col(src)).alias("a"),
+            F.when(swap, F.col(src)).otherwise(F.col(dst)).alias("b"),
+        )
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint()
-    changed = 0
-    hashmin_rounds = 0
-    for _ in range(max_iter):
-        hashmin_rounds += 1
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("node", "b"), "b")
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_component"))
-            .withColumnRenamed("a", "node")
-        )
-        # Carry the change flag INSIDE the checkpointed frame: the
-        # convergence probe then scans the pinned blocks instead of
-        # re-joining the new labels against the old ones (r6: one
-        # shuffle-join job per round removed from the loop).
-        flagged = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_component", F.col("component")) < F.col("component")
-                ).alias("__chg"),
+    cur = pairs.filter(F.col("a") != F.col("b"))
+    rounds = 0
+    while not _is_star_forest(cur):
+        if rounds == 60:  # O(log n) rounds: 60 covers any feasible n
+            raise RuntimeError(
+                "star-contraction components did not converge within 60 rounds"
+                " — pathological id graph (expected O(log n) rounds)"
             )
-            .localCheckpoint()
-        )
-        changed = flagged.filter("__chg").limit(1).count()
-        labels = flagged.drop("__chg")
-        if changed == 0:
-            break
+        cur = _star_round(cur).localCheckpoint()
+        rounds += 1
     if stats_out is not None:
-        stats_out["method"] = "hashmin"
-        stats_out["hashmin_rounds"] = hashmin_rounds
-    if changed != 0:
-        # chains longer than max_iter hops: degrade to the O(log n) star
-        # alternation on the ORIGINAL edges (correct from any start state;
-        # restarting avoids mixing the two labelings)
-        if stats_out is not None:
-            stats_out["method"] = "hashmin->star"
-        labels = _star_components(sym, nodes, star_rounds, stats_out)
-    sym.unpersist()
-    return labels
+        stats_out["star_rounds"] = rounds
+    # every node labels itself, and each leaf also its star's center: the
+    # min per node is the component
+    return (
+        pairs.select(F.col("a").alias("node"), F.col("a").alias("component"))
+        .unionByName(pairs.select(F.col("b").alias("node"), F.col("b").alias("component")))
+        .unionByName(cur.select(F.col("a").alias("node"), F.col("b").alias("component")))
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+        .localCheckpoint()
+    )
 
 
 def canonical_entity_ids(

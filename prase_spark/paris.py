@@ -55,6 +55,10 @@ from prase_spark.normalize import clamp01
 from prase_spark.seed import max_merge
 from prase_spark.skew import guarded_join
 
+# weights of the default fusion function (test.py:74-76)
+FUSION_PARIS_WEIGHT = 0.8
+FUSION_COSINE_WEIGHT = 0.2
+
 
 @dataclass
 class AlignState:
@@ -94,7 +98,14 @@ def rel_align_update(
     Scale note: the numerator condition ``t' == match(e)`` is an
     equi-condition, so it joins facts_r on BOTH (h', t') keys — it never
     materializes the hub-head expansion the candidate path needs, so
-    relation_pass costs two narrow joins total."""
+    relation_pass costs two narrow joins total.
+
+    Both float ``sum``s add in partition order, so the values can differ
+    in the last bits between shuffle layouts (AQE on or off, another
+    parallelism); so can the match probs, whose noisy-OR ``product``
+    multiplies in partition order too. Compare them across layouts with
+    a tolerance; the chosen counterparts do not move
+    (test_iteration_state_independent_of_shuffle_layout)."""
     numer = (
         cand_base.filter(F.col("e_cp").isNotNull() & (F.col("p_e") > 0.0))
         .join(
@@ -220,8 +231,8 @@ def entity_candidates(
                     F.col("emb_e").isNotNull() & F.col("emb_t").isNotNull(),
                     fusion(F.col("score"), F.col("emb_e"), F.col("emb_t"))
                     if fusion is not None
-                    else F.lit(cfg.fusion_paris_weight) * F.col("score")
-                    + F.lit(cfg.fusion_cosine_weight) * cosine_expr("emb_e", "emb_t"),
+                    else F.lit(FUSION_PARIS_WEIGHT) * F.col("score")
+                    + F.lit(FUSION_COSINE_WEIGHT) * cosine_expr("emb_e", "emb_t"),
                 ).otherwise(F.col("score")),
             )
         )

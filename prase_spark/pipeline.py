@@ -31,7 +31,6 @@ def bootstrap_seed(
     kg_l: KGFrames,
     kg_r: KGFrames,
     seed_mode: str = "literal",
-    name_seed_kwargs: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Initial match-state seed. ``literal`` is the reference's exact
     literal-value equality (objects/KGs.py:53-58); ``name`` bootstraps from
@@ -47,7 +46,7 @@ def bootstrap_seed(
             return sub, sup
     from prase_spark.seed import name_seed_matches
 
-    return name_seed_matches(kg_l, kg_r, **(name_seed_kwargs or {}))
+    return name_seed_matches(kg_l, kg_r)
 
 
 def _fixpoint(
@@ -90,7 +89,6 @@ def align(
     resume_from: str | None = None,
     checkpoint: bool = True,
     seed_mode: str = "literal",
-    name_seed_kwargs: dict | None = None,
 ) -> AlignmentRun:
     """Full fixpoint (objects/KGs.py:91-102). ``resume_from`` restores the
     latest checkpoint in that directory and continues (S7)."""
@@ -98,7 +96,7 @@ def align(
     if resume_from is not None:
         state = load_state(spark, resume_from)
     else:
-        sub, sup = bootstrap_seed(kg_l, kg_r, seed_mode, name_seed_kwargs)
+        sub, sup = bootstrap_seed(kg_l, kg_r, seed_mode)
         state = init_state(spark, sub, sup)
     return _fixpoint(kg_l, kg_r, state, cfg, gold, embeddings_l, embeddings_r, checkpoint)
 
@@ -119,7 +117,6 @@ def prase_feedback_align(
     reset_from_embeddings: bool = False,
     reset_use_lsh: bool | None = None,
     seed_mode: str = "literal",
-    name_seed_kwargs: dict | None = None,
 ) -> AlignmentRun:
     """The PRASE feedback loop (test.py:83-104):
 
@@ -136,7 +133,7 @@ def prase_feedback_align(
 
     cfg = cfg or ParisConfig()
     if prior_state is None:
-        sub, sup = bootstrap_seed(kg_l, kg_r, seed_mode, name_seed_kwargs)
+        sub, sup = bootstrap_seed(kg_l, kg_r, seed_mode)
         state = init_state(spark, sub, sup)
     else:
         # Fresh copy — never mutate the caller's state object — and restart

@@ -154,3 +154,35 @@ def test_second_iteration_matches_oracle(setup, iter1):
     assert_close_dicts(df_rel_to_dict(s3_rel), o_rel, tol=1e-8)
     got = {r["ent_id"]: (r["counterpart_id"], r["prob"]) for r in s3_cands.collect()}
     assert_close_dicts(got, o_best, tol=1e-8, cp_agreement=0.97)
+
+
+def test_iteration_state_independent_of_shuffle_layout(spark):
+    """Two iterations with AQE on and off (different shuffle layouts and
+    partition counts) pick the same counterparts; probs and rel-align
+    agree to 1e-12, because float sums and products aggregate in
+    partition order (paris.rel_align_update)."""
+    fx = two_kg_fixture(spark, n_ent=40, seed=42)
+    kg_l, kg_r = build_kg(fx["raw_l"]), build_kg(fx["raw_r"])
+    sub, sup = literal_seed_matches(kg_l, kg_r)
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    runs = []
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set(key, aqe)
+            state = init_state(spark, sub, sup)
+            for _ in range(2):
+                state = run_iteration(kg_l, kg_r, state, CFG)
+            runs.append(state)
+    finally:
+        spark.conf.set(key, prior)
+    on, off = runs
+    for frame in ("matches_sub", "matches_sup"):
+        a, b = getattr(on, frame), getattr(off, frame)
+        pick = ["ent_id", "counterpart_id", "is_lit"]
+        assert sorted(a.select(pick).collect()) == sorted(b.select(pick).collect())
+        assert_close_dicts(df_matches_to_dict(b), df_matches_to_dict(a), tol=1e-12)
+    for frame in ("rel_align_l", "rel_align_r"):
+        got, want = df_rel_to_dict(getattr(off, frame)), df_rel_to_dict(getattr(on, frame))
+        assert want
+        assert_close_dicts(got, want, tol=1e-12)

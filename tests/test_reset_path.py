@@ -114,7 +114,8 @@ def test_reset_dispatcher_size_gate(spark, monkeypatch):
     assert "CartesianProduct" in _plan(calls[0][1][0])
 
     calls.clear()
-    sub_big, sup_big = embedding_reset_matches(emb_l, emb_r, pair_budget=100)
+    monkeypatch.setattr(embed, "_BRUTE_FORCE_PAIR_BUDGET", 100)
+    sub_big, sup_big = embedding_reset_matches(emb_l, emb_r)
     assert [name for name, _ in calls] == ["lsh_argmax"]
     assert "CartesianProduct" not in _plan(calls[0][1])
     # LSH recall vs brute-force argmax on the same inputs
@@ -153,6 +154,7 @@ def test_reset_dispatcher_pins_once(spark, monkeypatch, lsh):
     """Both reset frames come back pinned: checkpoint scans holding the
     same rows as the unpinned path functions, after one probe action per
     side and one pin per frame (sup is derived from the pinned sub)."""
+    from prase_spark import embed
     from prase_spark.datapipe.buckets import DEFAULT_MAX_BUCKET
     from prase_spark.embed import (
         _claims_sup,
@@ -175,10 +177,10 @@ def test_reset_dispatcher_pins_once(spark, monkeypatch, lsh):
         want_sub, want_sup = brute_force_argmax(emb_l, emb_r, 0.2)
     want = _rows(want_sub), _rows(want_sup)
 
+    # in force for the call; the undo below also drops it
+    monkeypatch.setattr(embed, "_BRUTE_FORCE_PAIR_BUDGET", 100 if lsh else 10**9)
     actions = _count_actions(monkeypatch, type(emb_l))
-    sub, sup = embedding_reset_matches(
-        emb_l, emb_r, prob=0.2, pair_budget=100 if lsh else 10**9
-    )
+    sub, sup = embedding_reset_matches(emb_l, emb_r, prob=0.2)
     assert sorted(actions) == ["count", "first", "localCheckpoint", "localCheckpoint"]
     monkeypatch.undo()
 

@@ -95,37 +95,53 @@ def test_canonical_entity_ids(spark):
     assert ("L", 3) not in by_key
 
 
-def test_connected_components_long_chain_auto_fallback(spark):
-    """VERDICT r3 #4: a 100-hop chain (crawl-scale redirect/template
-    chains) must DEGRADE to the O(log n) large-star/small-star alternation
-    once hash-min runs out of iterations, not die — and produce exact min
-    labels."""
-    from pyspark.sql import functions as F
+def _union_find_labels(edges):
+    """Pure-Python oracle: node -> min node id of its component."""
+    parent = {}
 
-    from prase_spark.matching import connected_components
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    chain = spark.range(101).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    stats = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(chain, max_iter=4, stats_out=stats).collect()
-    }
-    assert len(got) == 102 and set(got.values()) == {0}
-    # telemetry: the fallback is visible to the operator, and the star
-    # phase closed a 101-hop diameter in O(log n) rounds
-    assert stats["method"] == "hashmin->star"
-    assert stats["hashmin_rounds"] == 4
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _labels(df, stats=None):
+    comp = connected_components(df, stats_out=stats)
+    return {r["node"]: r["component"] for r in comp.collect()}
+
+
+def test_connected_components_long_chain_job_budget(spark):
+    """A 101-hop chain (crawl-scale redirect/template chains) closes in
+    O(log n) large-star/small-star rounds with exact min labels, inside
+    a Spark job budget that O(diameter) label propagation (~300 jobs
+    here) would exceed."""
+    chain = [(i, i + 1) for i in range(101)]
+    df = spark.createDataFrame(chain, "src LONG, dst LONG")
+    sc, group, stats = spark.sparkContext, "cc_long_chain", {}
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        got = _labels(df, stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _union_find_labels(chain)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 160
     assert 1 <= stats["star_rounds"] <= 12
 
 
-# chain 0..6, cycle 10-11-12-10, star around 20, bridge 6-10
+# chain 0..6, cycle 10-11-12-10, star around 20, bridge 6-10, self-loop 40
 _MULTI_COMPONENT_EDGES = [
     *[(i, i + 1) for i in range(6)],
     (10, 11), (11, 12), (12, 10), (6, 10),
     (20, 21), (20, 22), (20, 23),
     (30, 31),
+    (40, 40),
 ]
 
 
@@ -135,25 +151,24 @@ def _random_edges(seed=7, n_nodes=300, n_edges=320):
     return [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
 
 
+# a 1:1 match graph (canonical_entity_ids' usual input) is already a
+# star forest: labels come from the edges with no round run
+_ONE_TO_ONE_EDGES = [(i, 100 + i) for i in range(20)]
+
+
 @pytest.mark.parametrize(
-    "edges", [_MULTI_COMPONENT_EDGES, _random_edges()], ids=["multi_component", "random"]
+    "edges",
+    [_MULTI_COMPONENT_EDGES, _random_edges(), _ONE_TO_ONE_EDGES],
+    ids=["multi_component", "random", "one_to_one"],
 )
-def test_connected_components_star_fallback_matches_converged(spark, edges):
-    """max_iter=1 forces the large-star/small-star fallback; its labels
-    must equal the converged hash-min run's."""
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-
-    def labels(**kw):
-        stats = {}
-        comp = connected_components(df, stats_out=stats, **kw)
-        return {r["node"]: r["component"] for r in comp.collect()}, stats["method"]
-
-    ref, ref_method = labels()
-    got, method = labels(max_iter=1)
-    assert (ref_method, method) == ("hashmin", "hashmin->star")
-    assert got == ref
+def test_connected_components_matches_union_find(spark, edges):
+    stats = {}
+    got = _labels(spark.createDataFrame(edges, "src LONG, dst LONG"), stats)
+    assert got == _union_find_labels(edges)
     if edges is _MULTI_COMPONENT_EDGES:
-        assert got[12] == 0 and got[23] == 20 and got[31] == 30
+        assert got[12] == 0 and got[23] == 20 and got[31] == 30 and got[40] == 40
+    if edges is _ONE_TO_ONE_EDGES:
+        assert stats["star_rounds"] == 0
 
 
 def test_align_seed_mode_auto_falls_back_to_names(spark):
