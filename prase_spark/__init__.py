@@ -1,263 +1,47 @@
 """prase_spark — a PySpark-native knowledge-graph construction + entity-alignment engine.
 
 Brand-new implementation (NOT a port) with the capabilities of the reference
-qizhyuan/PRASE-Python (/root/reference): PARIS probabilistic reasoning and
-embedding-similarity fusion, re-expressed as Spark DataFrame dataflow:
+qizhyuan/PRASE-Python: PARIS probabilistic reasoning and embedding-similarity
+fusion, re-expressed as Spark DataFrame dataflow.
 
-- KG build: dict-encode + inverse-edge union + functionality aggregation
-  (reference: objects/KG.py) -> kgbuild.py
-- literal seed join (reference: objects/KGs.py:53-58) -> seed.py
-- PARIS Jacobi iteration (reference: model/PARIS.py) -> paris.py
-- mutual-best bipartite matching (reference: objects/KGs.py:222-241) -> matching.py
-- embedding similarity + fusion (reference: test.py:74-76, objects/KGs.py:265-279)
-  -> embed.py
-- page-corpus triple extraction (new surface per BASELINE.json input_hint)
-  -> extract.py
-- web-scale training-data ops (dedup / similarity search / text stats)
-  -> datapipe/
+Modules are the API. This package root imports nothing: import each name
+from the module that defines it (``from prase_spark.pipeline import align``).
+A process — the driver, a Python worker unpickling an ``extract`` or
+``embed`` function, a ``spark-submit --py-files`` executor — then loads only
+that module and its own imports, and a broken or slow import in an unrelated
+module cannot take down the pipeline.
+
+Module map. The paper pipeline (crawl pages -> triples -> KG pair ->
+PARIS/PRASE -> canonical ids -> materialized graph):
+
+- config: ``get_spark`` session factory, ``ParisConfig`` hyperparameters
+- extract: page html -> text -> (subj, pred, obj) triples
+- normalize, ids: native name normalizers and dense-id assignment (used
+  by kgbuild)
+- kgbuild: dict-encode + inverse-edge union + functionality
+  (reference: objects/KG.py)
+- seed: literal seed join (reference: objects/KGs.py:53-58)
+- paris: the PARIS Jacobi iteration (reference: model/PARIS.py)
+- skew: the product-skew guard on the PARIS expansion join
+- embed: cosine scoring, LSH blocking, embedding reset
+  (reference: test.py:74-76, objects/KGs.py:265-279)
+- matching: mutual-best bipartite matching (reference: objects/KGs.py:222-241)
+  and connected-components canonical ids
+- pipeline: the fixpoint loop (``align``, ``prase_feedback_align``),
+  ``build_kgs_from_raw``, ``materialize``
+- concurrency: driver-thread overlap of independent jobs
+- checkpoint: ``save_state`` / ``load_state`` for the fixpoint
+- evaluate: P/R/F1 sweep (``evaluate_alignment``)
+
+Beyond the pipeline:
+
+- ingest: warc, cdx, sources, streaming, structured, htmltables, linkgraph,
+  rdfio, tpch_kg, fixtures
+- KG analytics: graphstats, temporalgraph, walks, sgns, transe, closure,
+  shapes, bgp, rulemine, distsup
+- linkage and fusion: nameblock, fuzzy, linkage, metablock, survivorship,
+  truth, temporal, asof
+- table schemas and sinks: schemas, io
+- web-scale training-data operations (dedup, similarity search, text
+  analysis, chunking, decontamination, sampling): the ``datapipe`` package
 """
-
-from prase_spark.asof import asof_join
-from prase_spark.bgp import bgp_aggregate, bgp_construct, bgp_match, bgp_union
-from prase_spark.cdx import (
-    build_cdx,
-    cdx_lookup,
-    mark_revisits,
-    surt_key,
-    to_cdxj,
-    write_cdx_index,
-)
-from prase_spark.checkpoint import load_state, save_state
-from prase_spark.closure import propagate_types, rdfs_entail, transitive_closure
-from prase_spark.config import ParisConfig, get_spark
-from prase_spark.evaluate import blocking_metrics, evaluate_alignment
-from prase_spark.extract import (
-    extract_head_meta,
-    extract_og_properties,
-    extract_text,
-    extract_triples,
-    og_cards,
-    og_to_raw_triples,
-)
-from prase_spark.htmltables import (
-    parse_tables,
-    table_cells,
-    table_stats,
-    tables_to_triples,
-)
-from prase_spark.structured import (
-    extract_structured,
-    ldjson_triples,
-    microdata_triples,
-    rdfa_triples,
-    structured_stats,
-    structured_to_raw_triples,
-)
-from prase_spark.graphstats import (
-    degrees,
-    hits,
-    label_propagation,
-    link_candidates,
-    node_triangles,
-    pagerank,
-    personalized_pagerank,
-    triangle_count,
-)
-from prase_spark.walks import (
-    context_similarity,
-    node2vec_walks,
-    random_walks,
-    skipgram_pairs,
-)
-from prase_spark.distsup import distant_supervision, find_mentions, split_sentences
-from prase_spark.evaluate import cluster_metrics
-from prase_spark.matching import compose_alignment
-from prase_spark.sgns import SGNSModel, sgns_similarity, train_sgns
-from prase_spark.io import bucket_metrics, zorder_key, zorder_layout
-from prase_spark.kgbuild import KGFrames, build_kg, kg_info
-from prase_spark.linkgraph import (
-    anchor_text_priors,
-    extract_hreflang,
-    extract_links,
-    host_link_graph,
-    hreflang_clusters,
-    link_mentions,
-    resolve_href,
-)
-from prase_spark.matching import (
-    bipartite_match,
-    canonical_entity_ids,
-    components_min_label,
-    connected_components,
-    incremental_components,
-)
-from prase_spark.fuzzy import fuzzy_join
-from prase_spark.linkage import fellegi_sunter
-from prase_spark.metablock import (
-    global_rank,
-    meta_block_candidates,
-    sorted_neighborhood_pairs,
-)
-from prase_spark.graphstats import (
-    butterfly_counts,
-    borda_aggregate,
-    clustering_coefficient_counts,
-    cocitation_counts,
-    coreness_hindex,
-    graph_mixing_stats,
-    rich_club_counts,
-    scc_fwbw_min,
-    shortest_path_counts,
-    strongly_connected_components,
-    wl_colors,
-)
-from prase_spark.rdfio import from_ntriples, to_ntriples
-from prase_spark.shapes import (
-    characteristic_sets,
-    property_partitions,
-    shacl_validate,
-)
-from prase_spark.warc import (
-    read_warc,
-    warc_file_metrics,
-    warc_to_pages,
-    wet_to_pages,
-)
-from prase_spark.seed import seed_from_page_clusters
-from prase_spark.temporal import fact_history, facts_asof, kg_diff
-from prase_spark.temporalgraph import earliest_arrival
-from prase_spark.survivorship import golden_record
-from prase_spark.pipeline import (
-    align,
-    alignment_results,
-    bootstrap_seed,
-    build_kgs_from_raw,
-    materialize,
-    partition_metrics,
-    prase_feedback_align,
-)
-from prase_spark.transe import (
-    TransEModel,
-    init_entity_embeddings,
-    train_transe,
-    transe_scores,
-)
-
-__all__ = [
-    "ParisConfig",
-    "get_spark",
-    "KGFrames",
-    "build_kg",
-    "build_kgs_from_raw",
-    "kg_info",
-    "align",
-    "prase_feedback_align",
-    "alignment_results",
-    "bootstrap_seed",
-    "seed_from_page_clusters",
-    "fact_history",
-    "facts_asof",
-    "kg_diff",
-    "earliest_arrival",
-    "golden_record",
-    "bipartite_match",
-    "canonical_entity_ids",
-    "connected_components",
-    "components_min_label",
-    "evaluate_alignment",
-    "blocking_metrics",
-    "extract_text",
-    "extract_triples",
-    "materialize",
-    "partition_metrics",
-    "load_state",
-    "save_state",
-    "degrees",
-    "pagerank",
-    "personalized_pagerank",
-    "hits",
-    "random_walks",
-    "node2vec_walks",
-    "skipgram_pairs",
-    "context_similarity",
-    "distant_supervision",
-    "find_mentions",
-    "split_sentences",
-    "cluster_metrics",
-    "compose_alignment",
-    "SGNSModel",
-    "train_sgns",
-    "sgns_similarity",
-    "label_propagation",
-    "triangle_count",
-    "node_triangles",
-    "link_candidates",
-    "asof_join",
-    "bgp_match",
-    "bgp_aggregate",
-    "bgp_union",
-    "bgp_construct",
-    "surt_key",
-    "build_cdx",
-    "write_cdx_index",
-    "cdx_lookup",
-    "mark_revisits",
-    "to_cdxj",
-    "extract_links",
-    "extract_hreflang",
-    "hreflang_clusters",
-    "extract_head_meta",
-    "extract_og_properties",
-    "og_cards",
-    "og_to_raw_triples",
-    "extract_structured",
-    "ldjson_triples",
-    "microdata_triples",
-    "rdfa_triples",
-    "parse_tables",
-    "table_cells",
-    "table_stats",
-    "tables_to_triples",
-    "structured_stats",
-    "structured_to_raw_triples",
-    "resolve_href",
-    "host_link_graph",
-    "anchor_text_priors",
-    "link_mentions",
-    "transitive_closure",
-    "propagate_types",
-    "rdfs_entail",
-    "incremental_components",
-    "to_ntriples",
-    "from_ntriples",
-    "characteristic_sets",
-    "property_partitions",
-    "shacl_validate",
-    "fuzzy_join",
-    "meta_block_candidates",
-    "global_rank",
-    "sorted_neighborhood_pairs",
-    "fellegi_sunter",
-    "strongly_connected_components",
-    "scc_fwbw_min",
-    "coreness_hindex",
-    "butterfly_counts",
-    "graph_mixing_stats",
-    "rich_club_counts",
-    "clustering_coefficient_counts",
-    "borda_aggregate",
-    "cocitation_counts",
-    "wl_colors",
-    "shortest_path_counts",
-    "read_warc",
-    "warc_file_metrics",
-    "warc_to_pages",
-    "wet_to_pages",
-    "TransEModel",
-    "init_entity_embeddings",
-    "train_transe",
-    "transe_scores",
-    "bucket_metrics",
-    "zorder_key",
-    "zorder_layout",
-]

@@ -1,213 +1,23 @@
-"""Large-scale training-data pipeline operations (beyond the reference):
-deduplication, similarity search, text analysis, chunking/packing,
-decontamination, sampling, multimodal plumbing."""
+"""Large-scale training-data pipeline operations (beyond the reference).
 
-from prase_spark.datapipe.boilerplate import host_of, remove_boilerplate
-from prase_spark.datapipe.bpetrain import bpe_token_counts, bpe_train, word_table
-from prase_spark.datapipe.chunking import cdc_chunks, chunk_documents, pack_chunks
-from prase_spark.datapipe.colloc import collocations
-from prase_spark.datapipe.paradedup import dedup_paragraphs
-from prase_spark.datapipe.setjoin import containment_join, prefix_jaccard_join
-from prase_spark.datapipe.sketches import cms_lookup, count_min
-from prase_spark.datapipe.profile import exact_quantiles
-from prase_spark.datapipe.textrank import textrank_keywords
-from prase_spark.datapipe.langid_ct import classify_language, train_language_profiles
-from prase_spark.datapipe.winnow import winnow_fingerprints
-from prase_spark.datapipe.skyline import skyline
-from prase_spark.datapipe.profile import corpus_profile
-from prase_spark.datapipe.sessionize import sessionize
-from prase_spark.datapipe.decontam import decontaminate, decontaminate_bloom, decontaminate_fuzzy
-from prase_spark.datapipe.hoststats import (
-    filter_by_domain_blocklist,
-    filter_by_hosts,
-    flag_hosts,
-    host_stats,
-    registrable_domain,
-)
-from prase_spark.datapipe.pii import add_pii_counts, redact_corpus, redact_pii
-from prase_spark.datapipe.robots import (
-    drop_noindex,
-    parse_robots,
-    robots_allowed,
-    robots_sitemaps,
-)
-from prase_spark.datapipe.sitemaps import (
-    parse_sitemaps,
-    sitemap_index,
-    staleness_against_cdx,
-)
-from prase_spark.datapipe.textstats import intra_doc_repetition, language_mix, word_ngrams
-from prase_spark.datapipe.incremental import hash_store, incremental_exact, incremental_minhash, minhash_store
-from prase_spark.datapipe.lmscore import (
-    bigram_vocab,
-    bigram_vocab_hashed,
-    lm_score,
-    lm_score_bigram,
-    lm_score_bigram_hashed,
-    unigram_vocab,
-    unigram_vocab_hashed,
-)
-from prase_spark.datapipe.textindex import document_frequency, inverted_index, rare_term_ratio, term_counts, tfidf_terms
-from prase_spark.datapipe.dedup import (
-    hamming_pairs,
-    exact_dedup,
-    keep_best,
-    minhash_dedup,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash_pairs,
-    simhash_pairs_manku,
-)
-from prase_spark.datapipe.multimodal import (
-    media_ahash,
-    media_lhash,
-    decode_media_features,
-    extract_media_features,
-    probe_media_metadata,
-)
-from prase_spark.datapipe.sampling import (
-    cap_per_group,
-    hash_sample,
-    stratified_sample,
-    temperature_sample,
-    temperature_weights,
-)
-from prase_spark.datapipe.feeds import discover_feeds, parse_feeds
-from prase_spark.datapipe.urlnorm import (
-    canonical_url,
-    dedup_by_url,
-    page_identity,
-    resolve_redirects,
-)
-from prase_spark.datapipe.classify import (
-    LogisticModel,
-    classifier_score,
-    nb_log_odds_weights,
-    train_logistic_weights,
-)
-from prase_spark.datapipe.dsir import bucket_model, dsir_sample, dsir_weights, hashed_grams
-from prase_spark.datapipe.substrdedup import kgram_fingerprints, substring_dup_stats
-from prase_spark.datapipe.sketches import kmv_distinct
-from prase_spark.datapipe.pq import (
-    pq_adc_topk,
-    pq_codebook_df,
-    pq_encode,
-    train_pq_codebooks,
-)
-from prase_spark.datapipe.simsearch import (
-    build_ivf_index,
-    cosine_topk,
-    embedding_neardup,
-    ivf_topk,
-    load_ivf_index,
-    lsh_topk,
-    save_ivf_index,
-    search_ivf_index,
-    train_ivf_centroids,
-)
-from prase_spark.datapipe.textstats import (
-    add_fingerprint,
-    add_quality,
-    corpus_stats,
-    language_id,
-    quality_score,
-    token_count,
-)
+This package root imports nothing: import each name from the module that
+defines it (``from prase_spark.datapipe.dedup import minhash_dedup``).
 
-__all__ = [
-    "hashed_grams",
-    "bucket_model",
-    "dsir_weights",
-    "dsir_sample",
-    "kgram_fingerprints",
-    "substring_dup_stats",
-    "classifier_score",
-    "nb_log_odds_weights",
-    "train_logistic_weights",
-    "LogisticModel",
-    "lm_score",
-    "unigram_vocab",
-    "bigram_vocab",
-    "lm_score_bigram",
-    "unigram_vocab_hashed",
-    "bigram_vocab_hashed",
-    "lm_score_bigram_hashed",
-    "temperature_sample",
-    "temperature_weights",
-    "exact_dedup",
-    "bpe_token_counts",
-    "bpe_train",
-    "word_table",
-    "minhash_dedup",
-    "prefix_jaccard_join",
-    "containment_join",
-    "count_min",
-    "cms_lookup",
-    "exact_quantiles",
-    "textrank_keywords",
-    "train_language_profiles",
-    "classify_language",
-    "winnow_fingerprints",
-    "skyline",
-    "minhash_lsh_pairs",
-    "keep_best",
-    "simhash_pairs",
-    "simhash_pairs_manku",
-    "ngram_jaccard_pairs",
-    "cosine_topk",
-    "lsh_topk",
-    "ivf_topk",
-    "build_ivf_index",
-    "save_ivf_index",
-    "load_ivf_index",
-    "search_ivf_index",
-    "train_ivf_centroids",
-    "embedding_neardup",
-    "chunk_documents",
-    "pack_chunks",
-    "decontaminate",
-    "decontaminate_bloom",
-    "decontaminate_fuzzy",
-    "document_frequency",
-    "hash_store",
-    "incremental_exact",
-    "incremental_minhash",
-    "minhash_store",
-    "inverted_index",
-    "term_counts",
-    "tfidf_terms",
-    "remove_boilerplate",
-    "host_of",
-    "canonical_url",
-    "resolve_redirects",
-    "dedup_by_url",
-    "page_identity",
-    "parse_feeds",
-    "robots_sitemaps",
-    "discover_feeds",
-    "hash_sample",
-    "stratified_sample",
-    "cap_per_group",
-    "token_count",
-    "quality_score",
-    "add_quality",
-    "add_fingerprint",
-    "language_id",
-    "corpus_stats",
-    "decode_media_features",
-    "extract_media_features",
-    "probe_media_metadata",
-    "collocations",
-    "dedup_paragraphs",
-    "corpus_profile",
-    "sessionize",
-    "kmv_distinct",
-    "cdc_chunks",
-    "hamming_pairs",
-    "media_ahash",
-    "media_lhash",
-    "pq_adc_topk",
-    "pq_codebook_df",
-    "pq_encode",
-    "train_pq_codebooks",
-]
+Module map:
+
+- deduplication: dedup (exact, MinHash-LSH, SimHash, n-gram Jaccard,
+  ``minhash_dedup``), paradedup, substrdedup, winnow, setjoin,
+  incremental, urlnorm
+- similarity search: simsearch (``cosine_topk``, ``lsh_topk``, IVF,
+  ``embedding_neardup``), pq, buckets (LSH band-bucket caps), hashing
+- text analysis: textstats, textindex, textrank, colloc, langid_ct,
+  lmscore, classify, profile, bpetrain
+- curation: boilerplate, pii, hoststats, robots, sitemaps, feeds,
+  decontam (``decontaminate``)
+- chunking and packing: chunking (``chunk_documents``, ``pack_chunks``,
+  ``cdc_chunks``)
+- sampling and selection: sampling (``hash_sample``), dsir, skyline
+- sketches: sketches (count-min, KMV)
+- event logs: sessionize
+- multimodal plumbing: multimodal
+"""

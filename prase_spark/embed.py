@@ -117,17 +117,22 @@ def brute_force_argmax(
     return sub, _claims_sup(sub, prob)
 
 
-def auto_band_bits(
-    n_rows: int, margin: int = 2, min_bits: int = 8, max_bits: int = 24
-) -> int:
+# auto_band_bits sizing: bits = log2(n) + BAND_BITS_MARGIN, clamped to
+# [MIN_BAND_BITS, MAX_BAND_BITS].
+BAND_BITS_MARGIN = 2
+MIN_BAND_BITS = 8
+MAX_BAND_BITS = 24
+
+
+def auto_band_bits(n_rows: int) -> int:
     """Size the band key to the corpus: bits ≈ log2(n) + margin keeps the
     EXPECTED random-collision volume per band at n²/2^bits ≈ n/2^margin —
     linear in n, not quadratic. 4-bit keys (16 buckets) on a 10^9-row
     corpus are n²/16 candidate pairs: the cross join in disguise."""
     import math
 
-    bits = math.ceil(math.log2(max(n_rows, 2))) + margin
-    return max(min_bits, min(max_bits, bits))
+    bits = math.ceil(math.log2(max(n_rows, 2))) + BAND_BITS_MARGIN
+    return max(MIN_BAND_BITS, min(MAX_BAND_BITS, bits))
 
 
 def hyperplane_signatures(
@@ -152,22 +157,23 @@ def hyperplane_signatures(
     rng = np.random.default_rng(seed)
     planes = np.round(rng.normal(size=(n_bits, dim)), 6).astype(np.float64)
     bits_per_band = n_bits // n_bands
+    weights = (1 << np.arange(bits_per_band)).astype(np.int64)
+    band_ids = np.arange(n_bands, dtype=np.int32)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
+            n = len(pdf)
+            if n == 0:
                 continue
-            mat = np.stack(pdf["embedding"].map(lambda v: np.asarray(v, dtype=np.float64)))
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             bits = (mat @ planes.T) >= 0.0  # (n, n_bits)
-            ids, bands, keys = [], [], []
-            weights = (1 << np.arange(bits_per_band)).astype(np.int64)
-            for b in range(n_bands):
-                chunk = bits[:, b * bits_per_band : (b + 1) * bits_per_band]
-                key = chunk @ weights
-                ids.extend(pdf["ent_id"].tolist())
-                bands.extend([b] * len(pdf))
-                keys.extend(key.tolist())
-            yield pd.DataFrame({"ent_id": ids, "band": bands, "band_key": keys})
+            keys = bits.reshape(n, n_bands, bits_per_band) @ weights  # (n, n_bands)
+            # band-major rows: every entity's band 0 key, then band 1, ...
+            yield pd.DataFrame({
+                "ent_id": np.tile(pdf["ent_id"].to_numpy(), n_bands),
+                "band": np.repeat(band_ids, n),
+                "band_key": keys.T.ravel(),
+            })
 
     return emb.select("ent_id", "embedding").mapInPandas(
         run, "ent_id LONG, band INT, band_key LONG"

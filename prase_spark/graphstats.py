@@ -41,6 +41,10 @@ from pyspark.sql import functions as F
 #: still carries 9 exact decimal digits of rank mass per node).
 PAGERANK_SCALE = 10**12
 
+#: round cap of coreness_hindex's run-to-fixpoint mode (iterations=None);
+#: the h-operator converges in graph-diameter-ish rounds in practice.
+CORENESS_MAX_ITERATIONS = 100
+
 
 def degrees(
     edges: DataFrame, src: str = "src", dst: str = "dst"
@@ -822,7 +826,6 @@ def coreness_hindex(
     iterations: int | None = None,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 100,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """(node, core): k-core decomposition via the h-operator iteration
@@ -847,8 +850,8 @@ def coreness_hindex(
     ``iterations`` fixed (value-hashable, the gate mode: the DuckDB twin
     unrolls the same count) or None = run to the exact coreness
     fixpoint, detected by a changed-count that costs one lightweight job
-    per iteration (bounded by ``max_iterations``; converges in at most
-    graph-diameter-ish steps in practice — O(sqrt(V)) proven bound).
+    per iteration (bounded by ``CORENESS_MAX_ITERATIONS``; converges in at
+    most graph-diameter-ish steps in practice — O(sqrt(V)) proven bound).
 
     The per-node h-index is computed WITHOUT a window: sort_array over a
     collect_list of neighbor values + one codegen transform/array_max.
@@ -889,7 +892,7 @@ def coreness_hindex(
             val = _step(val).localCheckpoint()
         return val
     done = 0
-    for it in range(max_iterations):
+    for it in range(CORENESS_MAX_ITERATIONS):
         nxt = _step(val).localCheckpoint()
         changed = (
             nxt.join(val.withColumnRenamed("core", "__old"), "node")

@@ -195,26 +195,30 @@ def connected_components(
     )
 
 
-def canonical_entity_ids(
-    matches_sub: DataFrame, threshold: float, l_offset: int = 0, r_offset: int = 1 << 40
-) -> DataFrame:
+# R-side entity ids are shifted by this much in the equivalence graph of
+# canonical_entity_ids, so the two KGs' dense ids never collide (L ids stay
+# unshifted); a KG side would need 2^40 entities to reach it.
+R_ID_OFFSET = 1 << 40
+
+
+def canonical_entity_ids(matches_sub: DataFrame, threshold: float) -> DataFrame:
     """Collapse accepted match pairs into canonical cluster ids.
 
     Builds the equivalence graph from entity matches with prob ≥ threshold
-    (L ids offset apart from R ids) and returns (side, ent_id, canonical_id).
-    NEW functionality beyond the reference's 1:1 state (SURVEY.md §4 item 3).
+    (R ids shifted by ``R_ID_OFFSET``) and returns (side, ent_id,
+    canonical_id). NEW functionality beyond the reference's 1:1 state
+    (SURVEY.md §4 item 3).
     """
     pairs = matches_sub.filter((~F.col("is_lit")) & (F.col("prob") >= threshold))
     edges = pairs.select(
-        (F.col("ent_id") + F.lit(l_offset)).alias("src"),
-        (F.col("counterpart_id") + F.lit(r_offset)).alias("dst"),
+        F.col("ent_id").alias("src"),
+        (F.col("counterpart_id") + F.lit(R_ID_OFFSET)).alias("dst"),
     )
     comp = connected_components(edges)
+    is_r = F.col("node") >= R_ID_OFFSET
     return comp.select(
-        F.when(F.col("node") >= r_offset, F.lit("R")).otherwise(F.lit("L")).alias("side"),
-        F.when(F.col("node") >= r_offset, F.col("node") - r_offset)
-        .otherwise(F.col("node") - l_offset)
-        .alias("ent_id"),
+        F.when(is_r, F.lit("R")).otherwise(F.lit("L")).alias("side"),
+        F.when(is_r, F.col("node") - R_ID_OFFSET).otherwise(F.col("node")).alias("ent_id"),
         F.col("component").alias("canonical_id"),
     )
 

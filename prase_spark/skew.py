@@ -7,7 +7,7 @@ hub-head expansion: a three-way path join whose per-key OUTPUT is the
 product of the per-key input counts (a 3k x 3k hub has tiny inputs and a
 9M-row output). :func:`guarded_join` detects exactly that product and
 salts only the keys where it is catastrophic; this module owns that
-policy and its two thresholds.
+policy, its two thresholds and its hot-key cap.
 """
 
 from __future__ import annotations
@@ -26,18 +26,17 @@ GUARD_MIN_FACTS = 5_000_000
 # where one task would run for minutes — the catastrophic class, not the
 # merely-uneven one.
 HOT_PRODUCT_ROWS = 50_000_000
+# Most hot keys collected to the driver (largest products first): each one
+# becomes a literal in the guard's isin() filters.
+MAX_HOT_KEYS = 200
 
 
 def product_hot_keys(
-    probe: DataFrame,
-    build: DataFrame,
-    key: str,
-    min_out_rows: int,
-    top_k: int = 200,
+    probe: DataFrame, build: DataFrame, key: str, min_out_rows: int
 ) -> list:
     """Join keys whose OUTPUT contribution (probe rows x build rows) is at
     least ``min_out_rows`` — returned as collected rows
-    ``(key, __pc, __bc)``, largest product first.
+    ``(key, __pc, __bc)``, largest product first, at most ``MAX_HOT_KEYS``.
 
     r6 measurement: 5 hub keys = 82% of the PARIS expansion volume. Two
     per-key count aggs + a tiny join; both inputs are typically already
@@ -49,7 +48,7 @@ def product_hot_keys(
         pc.join(bc, key)
         .filter(F.col("__pc") * F.col("__bc") >= min_out_rows)
         .orderBy(F.desc(F.col("__pc") * F.col("__bc")))
-        .limit(top_k)
+        .limit(MAX_HOT_KEYS)
         .collect()
     )
 
@@ -61,11 +60,12 @@ def guarded_join(
     row multiset as the plain join, which it is whenever ``build_facts``
     is under GUARD_MIN_FACTS or no key's product reaches HOT_PRODUCT_ROWS.
 
-    Otherwise the hot keys (a collected driver list, capped at 200) split
-    both sides by literal isin() filters fused into the scans — no
-    semi/anti-join stages. Hot probe rows are scattered over ``k`` salt
-    buckets by a deterministic full-row hash, hot build rows replicated to
-    every bucket, and the salted leg is unioned with the plain cold join."""
+    Otherwise the hot keys (a collected driver list, capped at
+    MAX_HOT_KEYS) split both sides by literal isin() filters fused into the
+    scans — no semi/anti-join stages. Hot probe rows are scattered over
+    ``k`` salt buckets by a deterministic full-row hash, hot build rows
+    replicated to every bucket, and the salted leg is unioned with the
+    plain cold join."""
     hot_rows = (
         product_hot_keys(probe, build, key, HOT_PRODUCT_ROWS)
         if build_facts >= GUARD_MIN_FACTS

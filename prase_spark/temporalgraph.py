@@ -30,6 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: round cap of earliest_arrival's run-to-fixpoint mode (iterations=None);
+#: no fixpoint within it raises.
+ARRIVAL_MAX_ITERATIONS = 100
+
 
 def earliest_arrival(
     edges: DataFrame,
@@ -40,7 +44,6 @@ def earliest_arrival(
     node: str = "node",
     start_ts: int = 0,
     iterations: int | None = None,
-    max_iterations: int = 100,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """(node, arrival): minimum arrival time from any seed along a
@@ -80,7 +83,7 @@ def earliest_arrival(
             arr = _step(arr).localCheckpoint()
         return arr
     done = 0
-    for it in range(max_iterations):
+    for it in range(ARRIVAL_MAX_ITERATIONS):
         nxt = _step(arr).localCheckpoint()
         changed = (
             nxt.join(arr.withColumnRenamed("arrival", "__old"), "node", "left")
@@ -93,7 +96,7 @@ def earliest_arrival(
             break
     else:
         raise RuntimeError(
-            f"earliest_arrival: no fixpoint within max_iterations={max_iterations}"
+            f"earliest_arrival: no fixpoint within {ARRIVAL_MAX_ITERATIONS} iterations"
         )
     if stats_out is not None:
         stats_out["arrival_iterations"] = done

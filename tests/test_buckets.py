@@ -286,3 +286,30 @@ def test_hyperplane_requires_divisible_bands():
 
     with pytest.raises(ValueError, match="multiple"):
         hyperplane_signatures(None, dim=4, n_bits=30, n_bands=8)
+
+
+def test_hyperplane_signatures_match_per_row_reference(spark):
+    """The vectorized band keys equal a plain per-row numpy loop, row for
+    row in band-major order (band 0 for every entity, then band 1, ...),
+    a zero vector included (every dot is 0 >= 0, so all bits set)."""
+    import numpy as np
+
+    from prase_spark.embed import hyperplane_signatures
+
+    n, dim, n_bits, n_bands, seed = 50, 16, 128, 8, 42
+    mat = np.random.default_rng(7).normal(size=(n, dim)).astype(np.float32)
+    mat[13] = 0.0
+    rows = [(100 + i, [float(x) for x in mat[i]]) for i in range(n)]
+    emb = spark.createDataFrame(rows, "ent_id LONG, embedding ARRAY<FLOAT>").coalesce(1)
+    got = [tuple(r) for r in hyperplane_signatures(emb, dim, n_bits, n_bands, seed).collect()]
+
+    planes = np.round(np.random.default_rng(seed).normal(size=(n_bits, dim)), 6)
+    bpb = n_bits // n_bands
+    want = []
+    for b in range(n_bands):
+        for ent_id, vec in rows:
+            v = np.asarray(vec, dtype=np.float64)
+            key = sum(1 << j for j in range(bpb) if float(v @ planes[b * bpb + j]) >= 0.0)
+            want.append((ent_id, b, key))
+    assert got == want
+    assert {k for e, _, k in got if e == 113} == {(1 << bpb) - 1}
